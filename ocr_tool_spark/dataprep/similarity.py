@@ -169,9 +169,12 @@ def srp_signatures(
             # flatten() honors offsets/slices, so no O(n·dim) Python
             # objects ever materialize. Nulls/ragged rows violate the
             # embedding contract and fail loudly instead of silently
-            # taking a 100× slower object path.
+            # taking a 100× slower object path. The length check is per
+            # row: ragged rows whose lengths sum to n*dim would
+            # otherwise be reshaped across row boundaries.
             flat = vecs.flatten()
-            if n and (vecs.null_count or len(flat) != n * dim):
+            lens = np.diff(vecs.offsets.to_numpy())
+            if vecs.null_count or (lens != dim).any():
                 raise ValueError(
                     f"{vec_col} must be non-null fixed-dim({dim}) vectors"
                 )

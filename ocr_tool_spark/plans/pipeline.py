@@ -16,6 +16,8 @@ a broadcast hash join; at 10^12-doc scale it degrades gracefully to a
 shuffled join that AQE can skew-split. OCR-per-distinct-ref trades one
 extra exchange for never OCR-ing a shared scan twice — at mostly-unique
 media it costs ~nothing (the exchange carries refs, not bitmaps).
+Building the media branch runs one eager, payload-pruned action: the
+referenced page count that sizes the OCR stage (ocr_fan_out).
 
 Verified with the event-log profile (scripts/scaling_bench.py): the
 two dominant stages — text scan→explode→DOM-UDF→partial-agg and
@@ -40,34 +42,46 @@ from ocr_tool_spark.functions.ocr import ocr_media_udf
 from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
 
 
-def ocr_referenced_media(
-    media_spans: DataFrame, media_store: DataFrame, per_page: bool = True
-) -> DataFrame:
+def referenced_page_count(needed: DataFrame) -> DataFrame:
+    """-> one row, ``pages``: the number of pages the OCR stage will
+    see in ``needed`` (null when none qualifies). Only ``media_ref``
+    (the semi-join key) and ``n_pages`` survive column pruning, so the
+    payload column is never read."""
+    return needed.filter(F.col("n_pages") > 0).agg(
+        F.sum("n_pages").alias("pages")
+    )
+
+
+def ocr_fan_out(needed: DataFrame) -> int:
+    """OCR-stage partition count: one per page, at most 8 per core.
+
+    Every Python-worker task costs ~0.1-0.3 s on a 4-vCPU host even
+    when its partition is empty, so a fixed 8*cores fan-out (32
+    tasks) spent ~5 s of a 2-batch runner pass OCR-ing 3 pages a
+    batch. Sizing by the page count keeps small batches at one task
+    per page, while at scale pages outnumber 8*cores and the cap keeps
+    the straggler split. The count is one metadata-only action
+    (payload pruned) that costs far less than the OCR it sizes."""
+    par = needed.sparkSession.sparkContext.defaultParallelism
+    pages = referenced_page_count(needed).first()["pages"] or 0
+    return max(1, min(8 * par, pages))
+
+
+def ocr_referenced_media(media_spans: DataFrame, media_store: DataFrame) -> DataFrame:
     """-> (media_ref, text, ocr_ms): one OCR invocation per distinct
     referenced media payload.
 
-    per_page=True explodes multi-page payloads into one row per page
-    BEFORE the Python stage (JVM-side binary slicing), so the OCR work
-    unit is a page, not a whole PDF: a 5-page scan no longer holds a
-    task slot 5x longer than its peers (the straggler tail of the OCR
-    stage is the dominant skew at scale). Page texts are re-joined per
-    payload by a small-text shuffle; ocr_ms is the summed page cost so
-    lineage percentiles keep meaning.
+    Multi-page payloads are exploded into one row per page BEFORE the
+    Python stage (JVM-side binary slicing), so the OCR work unit is a
+    page, not a whole PDF: a 5-page scan no longer holds a task slot
+    5x longer than its peers (the straggler tail of the OCR stage is
+    the dominant skew at scale). Page texts are re-joined per payload
+    by a small-text shuffle; ocr_ms is the summed page cost so lineage
+    percentiles keep meaning.
     """
     refs = media_spans.select("media_ref").distinct()
     needed = media_store.join(refs, "media_ref", "left_semi")
     res = F.col("_ocr")
-    if not per_page:
-        return (
-            needed.withColumn(
-                "_ocr", ocr_media_udf("bitmap", "width", "height", "n_pages")
-            )
-            .select(
-                "media_ref",
-                res["text"].alias("text"),
-                res["ocr_ms"].alias("ocr_ms"),
-            )
-        )
     # n_pages <= 0 (empty/malformed media) must degrade to "" like the
     # single-call read_media path — without the guard, sequence(0, -1)
     # yields a descending [0,-1] and the UDF reshape crashes the job
@@ -87,16 +101,12 @@ def ocr_referenced_media(
     # the plan, so byte-balanced partitions under-parallelize the most
     # expensive stage (measured: 11 coalesced tasks on 8 cores with a
     # 38 s straggler -> stage util 0.77). Round-robin the exploded
-    # pages to 8x parallelism UNCONDITIONALLY: the old
-    # .rdd.getNumPartitions() probe forced AQE to materialize the
-    # semi-join's query stages at plan-construction time — the shuffle
-    # ran once for the probe and again for the real action (ADVICE r3,
-    # medium) — and AQE coalescing meant the repartition fired anyway.
-    # 8*cores work units is the right OCR granularity at every scale;
-    # the shuffle it costs is the page frame itself, which the OCR
-    # stage dwarfs ~1000x.
-    par = media_spans.sparkSession.sparkContext.defaultParallelism
-    pages = pages.repartition(8 * par)
+    # pages to an explicit count instead: min(8*cores, pages), see
+    # ocr_fan_out. Do not size it with an .rdd.getNumPartitions() probe:
+    # under AQE that materializes the semi-join's query stages, bitmaps
+    # included, at plan-construction time and the shuffle runs twice
+    # (ADVICE r3, medium).
+    pages = pages.repartition(ocr_fan_out(needed))
     per = pages.withColumn(
         "_ocr", ocr_media_udf("page", "width", "height", F.lit(1))
     ).select(

@@ -12,8 +12,16 @@ Execution model, designed for the 10^12-doc table:
 2. **Commit loop**: pending partitions (all minus those in the lineage
    table for this run_id — the C5 anti-join, done driver-side on the
    tiny lineage frame) are processed in batches. Each batch is one
-   Spark job: scan pruned input → extract_spans → reassemble → append
-   to the output SnapshotTable → append one lineage row per partition.
+   pass: scan pruned input → extract_spans → reassemble → append to
+   the output SnapshotTable → append one lineage row per partition.
+   That pass runs as ~20 Spark jobs (measured 21.5 per batch on a
+   60-doc, 2-batch run: AQE query stages, the OCR page count, the
+   output write, the per-partition metrics and the lineage write), so
+   a small batch costs seconds of fixed overhead. Each Python-worker
+   task costs ~0.1-0.3 s on a 4-vCPU host even when its partition is
+   empty, so the batch's Python stages are sized by their work: the
+   OCR fan-out by the referenced page count (pipeline.ocr_fan_out)
+   and the lineage rows go through a pyarrow Table (no Python task).
 3. **Crash anywhere**: output appends are idempotent by batch_id
    (SnapshotTable contract), lineage is written after output, so on
    resume a half-committed batch is either skipped (lineage present) or
@@ -30,9 +38,14 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from datetime import datetime, timezone
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ocr_tool_spark.constants import KIND_MEDIA, KIND_TEXT
 from ocr_tool_spark.plans.pipeline import extract_spans
@@ -44,6 +57,17 @@ LINEAGE_SCHEMA = (
     "text_spans long, media_spans long, ocr_ms_p50 double, ocr_ms_p95 double, "
     "docs_per_sec double, snapshot_id long, committed_at timestamp"
 )
+
+
+def lineage_table(rows: list[tuple]) -> pa.Table:
+    """Lineage rows (tuples in ``LINEAGE_SCHEMA`` order) as a pyarrow
+    Table. ``createDataFrame`` turns a Table into a JVM-side local
+    relation; a Python list would go through ``sc.parallelize`` and
+    start ``defaultParallelism`` Python-worker tasks (~0.5 s a batch)."""
+    schema = StructType.fromDDL(LINEAGE_SCHEMA)
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
 
 
 def deterministic_run_id(*parts: str) -> str:
@@ -250,6 +274,7 @@ class PipelineRunner:
                 spans.unpersist()
             elapsed = max(time.perf_counter() - t0, 1e-9)
             total_docs = int(observed.get("docs") or sum(m.docs for m in metrics))
+            committed_at = datetime.now(timezone.utc)
             lineage_rows = [
                 (
                     run_id,
@@ -262,13 +287,11 @@ class PipelineRunner:
                     float(m.ocr_ms_p95) if m.ocr_ms_p95 is not None else None,
                     round(total_docs / elapsed, 3),
                     int(snapshot_id),
+                    committed_at,
                 )
                 for m in metrics
             ]
-            ldf = self.spark.createDataFrame(
-                lineage_rows,
-                schema=LINEAGE_SCHEMA.rsplit(",", 1)[0],  # all but committed_at
-            ).withColumn("committed_at", F.current_timestamp())
+            ldf = self.spark.createDataFrame(lineage_table(lineage_rows))
             self.lineage.append(ldf, batch_id=batch_id)
         return run_id
 

@@ -660,6 +660,17 @@ def test_srp_signatures_zero_copy_and_contract_guard(spark):
         similarity.srp_signatures(bad, dim=2).collect()
 
 
+def test_srp_signatures_rejects_ragged_rows_with_matching_total(spark):
+    """One row holding 2*dim values next to an empty row sums to n*dim:
+    a total-length guard would reshape the first row's tail into the
+    second row. The per-row check must raise instead."""
+    bad = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0, 4.0]), (1, [])], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="non-null fixed-dim"):
+        similarity.srp_signatures(bad, dim=2).collect()
+
+
 def test_shingle_hash_sets_vectorized_distinct_matches_spec(spark):
     """VERDICT r4 wrong #4: the vectorized (lexsort + first-occurrence)
     per-doc distinct must match the plain-Python spec exactly — sorted

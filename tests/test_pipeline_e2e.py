@@ -89,3 +89,65 @@ def test_zero_page_media_degrades_to_empty_text(spark):
     assert (span.kind, span.text, span.media_ref, span.offset) == (
         "media", "", "img:zero", 0
     )
+
+
+def _fan_out_store(spark, tmp_path):
+    """Media store on parquet (so the page count's scan schema is
+    visible): 2-, 3- and 40-page payloads, a 0-page one, and a
+    payload no doc references."""
+    pages = {"m2": 2, "m3": 3, "m40": 40, "m0": 0, "unref": 7}
+    media = [
+        {"media_ref": ref, "media_kind": "image", "width": 4, "height": 4,
+         "n_pages": n, "bitmap": bytes(16 * n)}
+        for ref, n in pages.items()
+    ]
+    path = str(tmp_path / "media")
+    media_df(spark, media).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _media_spans(spark, refs):
+    from ocr_tool_spark.operators.spans import route
+
+    docs = [{"doc_id": f"d{i}", "spans": [
+        {"kind": "media", "text": None, "media_ref": r, "offset": 0},
+        {"kind": "media", "text": None, "media_ref": refs[0], "offset": 1},
+    ]} for i, r in enumerate(refs)]
+    return route(explode_spans(docs_df(spark, docs)))[1]
+
+
+@pytest.mark.parametrize("refs,pages", [
+    (["m2", "m3", "m0"], 5),     # a handful of pages: one task each
+    (["m2", "m3", "m40"], 45),   # more pages than 8*cores: capped
+    (["m0", "missing"], 0),      # nothing qualifies: floor of 1
+])
+def test_ocr_fan_out_follows_referenced_pages(spark, tmp_path, refs, pages):
+    """The OCR stage's round-robin repartition is sized
+    min(8*defaultParallelism, referenced pages), floor 1: each
+    Python-worker task costs a fixed ~0.1-0.3 s even when empty."""
+    import re
+
+    from ocr_tool_spark.plans.pipeline import ocr_referenced_media
+
+    store = _fan_out_store(spark, tmp_path)
+    ocr_res = ocr_referenced_media(_media_spans(spark, refs), store)
+    plan = ocr_res._jdf.queryExecution().optimizedPlan().toString()
+    parts = re.findall(r"Repartition (\d+), true", plan)
+    cap = 8 * spark.sparkContext.defaultParallelism
+    assert [int(p) for p in parts] == [max(1, min(cap, pages))]
+
+
+def test_ocr_page_count_never_reads_the_payload(spark, tmp_path):
+    """The page count that sizes the OCR fan-out is metadata-only: its
+    media-store scan reads media_ref and n_pages, never bitmap."""
+    from ocr_tool_spark.plans.pipeline import referenced_page_count
+
+    store = _fan_out_store(spark, tmp_path)
+    refs = _media_spans(spark, ["m2", "m3"]).select("media_ref").distinct()
+    count = referenced_page_count(store.join(refs, "media_ref", "left_semi"))
+    assert count.first()["pages"] == 5
+    plan = count._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1
+    assert "ReadSchema: struct<media_ref:string,n_pages:int>" in scans[0]
+    assert "bitmap" not in scans[0]

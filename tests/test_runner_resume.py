@@ -162,3 +162,57 @@ def test_default_run_id_differs_per_input(spark, tmp_path):
     rid_a = runner.run(docs_df(spark, docs_a))
     rid_b = runner.run(docs_df(spark, docs_b))
     assert rid_a != rid_b
+
+
+def test_lineage_frame_schema_and_plan(spark, tmp_path):
+    """The runner's per-batch lineage frame has exactly LINEAGE_SCHEMA,
+    field by field, and is a JVM-side local relation: a Python list
+    would go through sc.parallelize and start Python-worker tasks."""
+    from pyspark.sql.types import StructType
+
+    from ocr_tool_spark.plans.runner import LINEAGE_SCHEMA
+
+    docs, media = fixtures.gen_corpus(8, seed=1)
+    runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=2,
+                            batch_partitions=1)
+    frames, append = [], runner.lineage.append
+    runner.lineage.append = lambda df, batch_id: frames.append(df) or append(df, batch_id)
+    runner.run(docs_df(spark, docs), media_df(spark, media), run_id="r")
+    assert len(frames) == 2
+    expected = StructType.fromDDL(LINEAGE_SCHEMA)
+    for df in frames:
+        assert list(df.schema.fields) == list(expected.fields)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan
+    rows = runner.lineage.read(spark).collect()
+    assert sorted(r.partition_id for r in rows) == [0, 1]
+    assert all(r.committed_at is not None for r in rows)
+
+
+def test_lineage_written_before_arrow_rows_stays_readable(spark, tmp_path):
+    """A lineage table that already holds batches written the old way
+    (Python-list rows plus current_timestamp(), as a persistent work dir
+    such as q_pipeline_lineage's keeps them) reads back together with
+    batches written now, under one schema."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from ocr_tool_spark.plans.runner import LINEAGE_SCHEMA
+
+    docs, media = fixtures.gen_corpus(8, seed=1)
+    runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=2,
+                            batch_partitions=2)
+    old = spark.createDataFrame(
+        [("old", 0, 3, 5, 2, 3, 1.5, 2.5, 9.0, 0)],
+        schema=LINEAGE_SCHEMA.rsplit(",", 1)[0],
+    ).withColumn("committed_at", F.current_timestamp())
+    runner.lineage.append(old, batch_id="old/p00000-p00001")
+    runner.run(docs_df(spark, docs), media_df(spark, media), run_id="new")
+    lin = runner.lineage.read(spark)
+    assert [(f.name, f.dataType) for f in lin.schema.fields] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(LINEAGE_SCHEMA).fields
+    ]
+    rows = lin.collect()
+    assert sorted(r.run_id for r in rows) == ["new", "new", "old"]
+    assert sum(r.docs for r in rows if r.run_id == "new") == 8
+    assert all(r.committed_at is not None for r in rows)
