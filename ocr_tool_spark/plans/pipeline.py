@@ -16,8 +16,6 @@ a broadcast hash join; at 10^12-doc scale it degrades gracefully to a
 shuffled join that AQE can skew-split. OCR-per-distinct-ref trades one
 extra exchange for never OCR-ing a shared scan twice — at mostly-unique
 media it costs ~nothing (the exchange carries refs, not bitmaps).
-Building the media branch runs one eager, payload-pruned action: the
-referenced page count that sizes the OCR stage (ocr_fan_out).
 
 Verified with the event-log profile (scripts/scaling_bench.py): the
 two dominant stages — text scan→explode→DOM-UDF→partial-agg and
@@ -28,7 +26,11 @@ spot. Known, accepted cost: the docs table is scanned three times
 column-pruned to `spans` only). Fusing them needs a cache/checkpoint
 barrier whose write cost exceeds a pruned columnar re-scan at every
 scale we measured; the resumable runner persists the exploded frame
-instead, which serves the same purpose per partition batch.
+instead, which serves the same purpose per partition batch. The
+runner also asks for a page-sized OCR fan-out (`size_ocr_by_pages`),
+whose page count is a fourth, eager pass: it re-derives the refs from
+another `spans` scan of the batch and semi-joins the media store with
+its payload column pruned.
 """
 
 from __future__ import annotations
@@ -42,32 +44,40 @@ from ocr_tool_spark.functions.ocr import ocr_media_udf
 from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
 
 
-def referenced_page_count(needed: DataFrame) -> DataFrame:
-    """-> one row, ``pages``: the number of pages the OCR stage will
-    see in ``needed`` (null when none qualifies). Only ``media_ref``
-    (the semi-join key) and ``n_pages`` survive column pruning, so the
-    payload column is never read."""
-    return needed.filter(F.col("n_pages") > 0).agg(
-        F.sum("n_pages").alias("pages")
+def referenced_media(media_spans: DataFrame, media_store: DataFrame) -> DataFrame:
+    """-> the media_store rows the OCR stage sees: referenced by
+    ``media_spans`` (one semi-join on the distinct refs) and holding at
+    least one page. n_pages <= 0 (empty/malformed media) must degrade to
+    "" like the single-call read_media path — without the filter,
+    sequence(0, -1) yields a descending [0,-1] and the UDF reshape
+    crashes the job."""
+    refs = media_spans.select("media_ref").distinct()
+    return media_store.join(refs, "media_ref", "left_semi").filter(
+        F.col("n_pages") > 0
     )
 
 
-def ocr_fan_out(needed: DataFrame) -> int:
-    """OCR-stage partition count: one per page, at most 8 per core.
+def ocr_fan_out(live: DataFrame) -> int:
+    """OCR-stage partition count for the pages of ``live`` (see
+    referenced_media): one per page, at most 8 per core, at least 1.
 
-    Every Python-worker task costs ~0.1-0.3 s on a 4-vCPU host even
-    when its partition is empty, so a fixed 8*cores fan-out (32
-    tasks) spent ~5 s of a 2-batch runner pass OCR-ing 3 pages a
-    batch. Sizing by the page count keeps small batches at one task
-    per page, while at scale pages outnumber 8*cores and the cap keeps
-    the straggler split. The count is one metadata-only action
-    (payload pruned) that costs far less than the OCR it sizes."""
-    par = needed.sparkSession.sparkContext.defaultParallelism
-    pages = referenced_page_count(needed).first()["pages"] or 0
+    Eager: runs one action, ``sum(n_pages)``, which re-derives the refs
+    from a full scan of the media spans' source (the ``spans`` column)
+    and semi-joins the media store; only the store's ``bitmap`` is
+    pruned. Every Python-worker task costs ~0.1-0.3 s on a 4-vCPU host
+    even when its partition is empty, so for a small runner batch (3
+    pages) the count pays for itself many times over against a fixed
+    8*cores (32-task) fan-out. Once pages reach 8*cores the result is
+    the cap and the count is pure added cost, so only callers whose
+    batches are known to be small should pay it."""
+    par = live.sparkSession.sparkContext.defaultParallelism
+    pages = live.agg(F.sum("n_pages")).first()[0] or 0
     return max(1, min(8 * par, pages))
 
 
-def ocr_referenced_media(media_spans: DataFrame, media_store: DataFrame) -> DataFrame:
+def ocr_referenced_media(
+    media_spans: DataFrame, media_store: DataFrame, size_by_pages: bool = False
+) -> DataFrame:
     """-> (media_ref, text, ocr_ms): one OCR invocation per distinct
     referenced media payload.
 
@@ -78,14 +88,14 @@ def ocr_referenced_media(media_spans: DataFrame, media_store: DataFrame) -> Data
     the dominant skew at scale). Page texts are re-joined per payload
     by a small-text shuffle; ocr_ms is the summed page cost so lineage
     percentiles keep meaning.
+
+    The page frame is round-robined to 8*cores partitions, or with
+    ``size_by_pages`` to ``ocr_fan_out`` partitions, which costs an
+    eager page count while the plan is built.
     """
-    refs = media_spans.select("media_ref").distinct()
-    needed = media_store.join(refs, "media_ref", "left_semi")
+    live = referenced_media(media_spans, media_store)
     res = F.col("_ocr")
-    # n_pages <= 0 (empty/malformed media) must degrade to "" like the
-    # single-call read_media path — without the guard, sequence(0, -1)
-    # yields a descending [0,-1] and the UDF reshape crashes the job
-    pages = needed.filter(F.col("n_pages") > 0).select(
+    pages = live.select(
         "media_ref",
         "width",
         "height",
@@ -101,12 +111,16 @@ def ocr_referenced_media(media_spans: DataFrame, media_store: DataFrame) -> Data
     # the plan, so byte-balanced partitions under-parallelize the most
     # expensive stage (measured: 11 coalesced tasks on 8 cores with a
     # 38 s straggler -> stage util 0.77). Round-robin the exploded
-    # pages to an explicit count instead: min(8*cores, pages), see
-    # ocr_fan_out. Do not size it with an .rdd.getNumPartitions() probe:
-    # under AQE that materializes the semi-join's query stages, bitmaps
-    # included, at plan-construction time and the shuffle runs twice
-    # (ADVICE r3, medium).
-    pages = pages.repartition(ocr_fan_out(needed))
+    # pages to an explicit count instead. 8*cores is the right count
+    # once pages outnumber it, as they do at scale; below that every
+    # empty Python task still costs ~0.1-0.3 s, so small batches (the
+    # runner's) size it by their pages — ocr_fan_out, eager. Do not
+    # size it with an .rdd.getNumPartitions() probe: under AQE that
+    # materializes the semi-join's query stages, bitmaps included, at
+    # plan-construction time and the shuffle runs twice (ADVICE r3,
+    # medium).
+    par = live.sparkSession.sparkContext.defaultParallelism
+    pages = pages.repartition(ocr_fan_out(live) if size_by_pages else 8 * par)
     per = pages.withColumn(
         "_ocr", ocr_media_udf("page", "width", "height", F.lit(1))
     ).select(
@@ -140,10 +154,11 @@ def extract_spans(
     docs: DataFrame,
     media_store: DataFrame | None = None,
     broadcast_media: bool = True,
+    size_ocr_by_pages: bool = False,
 ) -> DataFrame:
     """Span-level extraction: one row per span with extracted text.
     Columns: doc_id, kind, text, media_ref, offset, ocr_ms (null on the
-    text branch)."""
+    text branch). ``size_ocr_by_pages``: see ocr_referenced_media."""
     spans = explode_spans(docs)
     text_spans, media_spans = route(spans)
 
@@ -164,7 +179,9 @@ def extract_spans(
             F.lit(None).cast("double").alias("ocr_ms"),
         )
     else:
-        ocr_res = ocr_referenced_media(media_spans, media_store)
+        ocr_res = ocr_referenced_media(
+            media_spans, media_store, size_by_pages=size_ocr_by_pages
+        )
         if broadcast_media:
             ocr_res = F.broadcast(ocr_res)
         media_out = (

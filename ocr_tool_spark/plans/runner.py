@@ -20,8 +20,10 @@ Execution model, designed for the 10^12-doc table:
    a small batch costs seconds of fixed overhead. Each Python-worker
    task costs ~0.1-0.3 s on a 4-vCPU host even when its partition is
    empty, so the batch's Python stages are sized by their work: the
-   OCR fan-out by the referenced page count (pipeline.ocr_fan_out)
-   and the lineage rows go through a pyarrow Table (no Python task).
+   OCR fan-out by the referenced page count (pipeline.ocr_fan_out, an
+   eager pruned pass over the batch; once a batch's pages reach
+   8*cores it returns the cap and is pure added cost) and the lineage
+   rows go through a pyarrow Table (no Python task).
 3. **Crash anywhere**: output appends are idempotent by batch_id
    (SnapshotTable contract), lineage is written after output, so on
    resume a half-committed batch is either skipped (lineage present) or
@@ -229,7 +231,9 @@ class PipelineRunner:
             # partition_id is a pure function of doc_id — recompute instead
             # of joining it back (saves a shuffle per batch)
             spans = with_partition_id(
-                extract_spans(part.select("doc_id", "spans"), media_store),
+                extract_spans(
+                    part.select("doc_id", "spans"), media_store, size_ocr_by_pages=True
+                ),
                 self.n_partitions,
             )
             spans.persist()

@@ -6,6 +6,7 @@ gate (pass rate = 100%) plus the metamorphic properties."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 import refspec
 from ocr_tool_spark import fixtures
@@ -116,36 +117,58 @@ def _media_spans(spark, refs):
     return route(explode_spans(docs_df(spark, docs)))[1]
 
 
+def _ocr_repartitions(frame):
+    import re
+
+    plan = frame._jdf.queryExecution().optimizedPlan().toString()
+    return [int(p) for p in re.findall(r"Repartition (\d+), true", plan)]
+
+
 @pytest.mark.parametrize("refs,pages", [
     (["m2", "m3", "m0"], 5),     # a handful of pages: one task each
     (["m2", "m3", "m40"], 45),   # more pages than 8*cores: capped
     (["m0", "missing"], 0),      # nothing qualifies: floor of 1
 ])
 def test_ocr_fan_out_follows_referenced_pages(spark, tmp_path, refs, pages):
-    """The OCR stage's round-robin repartition is sized
-    min(8*defaultParallelism, referenced pages), floor 1: each
+    """With size_by_pages the OCR stage's round-robin repartition is
+    sized min(8*defaultParallelism, referenced pages), floor 1: each
     Python-worker task costs a fixed ~0.1-0.3 s even when empty."""
-    import re
-
     from ocr_tool_spark.plans.pipeline import ocr_referenced_media
 
     store = _fan_out_store(spark, tmp_path)
-    ocr_res = ocr_referenced_media(_media_spans(spark, refs), store)
-    plan = ocr_res._jdf.queryExecution().optimizedPlan().toString()
-    parts = re.findall(r"Repartition (\d+), true", plan)
+    ocr_res = ocr_referenced_media(_media_spans(spark, refs), store, size_by_pages=True)
     cap = 8 * spark.sparkContext.defaultParallelism
-    assert [int(p) for p in parts] == [max(1, min(cap, pages))]
+    assert _ocr_repartitions(ocr_res) == [max(1, min(cap, pages))]
+
+
+def test_default_plan_runs_no_job_and_keeps_8x_fan_out(spark, tmp_path):
+    """Without size_by_pages building the plan is lazy — no page count
+    job — and the OCR fan-out stays 8*defaultParallelism."""
+    from ocr_tool_spark.plans.pipeline import ocr_referenced_media
+
+    store = _fan_out_store(spark, tmp_path)
+    spans = _media_spans(spark, ["m2", "m3"])
+    sc = spark.sparkContext
+    sc.setJobGroup("ocr-plan-build", "building the default OCR plan")
+    try:
+        ocr_res = ocr_referenced_media(spans, store)
+        built = sc.statusTracker().getJobIdsForGroup("ocr-plan-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert built == []
+    assert _ocr_repartitions(ocr_res) == [8 * sc.defaultParallelism]
 
 
 def test_ocr_page_count_never_reads_the_payload(spark, tmp_path):
-    """The page count that sizes the OCR fan-out is metadata-only: its
-    media-store scan reads media_ref and n_pages, never bitmap."""
-    from ocr_tool_spark.plans.pipeline import referenced_page_count
+    """The page count that sizes the OCR fan-out is metadata-only on
+    the media store: its scan reads media_ref and n_pages, never
+    bitmap."""
+    from ocr_tool_spark.plans.pipeline import ocr_fan_out, referenced_media
 
     store = _fan_out_store(spark, tmp_path)
-    refs = _media_spans(spark, ["m2", "m3"]).select("media_ref").distinct()
-    count = referenced_page_count(store.join(refs, "media_ref", "left_semi"))
-    assert count.first()["pages"] == 5
+    live = referenced_media(_media_spans(spark, ["m2", "m3"]), store)
+    assert ocr_fan_out(live) == 5
+    count = live.agg(F.sum("n_pages"))
     plan = count._jdf.queryExecution().executedPlan().toString()
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert len(scans) == 1
