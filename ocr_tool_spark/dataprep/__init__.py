@@ -18,8 +18,12 @@ def release_intermediates(df: DataFrame) -> None:
     operator itself can never know when the caches stop being needed —
     and in a long-lived session (the driver evaluates 50+ queries in
     one SparkSession) un-released blocks accumulate until context
-    shutdown (ADVICE r3). Blocks are spill-safe, so the leak degrades
-    memory headroom, not correctness.
+    shutdown (ADVICE r3).
+
+    Contract (ADVICE r5): after release, `df` and every frame derived
+    from it must not be acted on again. A released cache recomputes,
+    but a released localCheckpoint was the ONLY copy of its truncated
+    lineage, so an action on it fails with a missing-block error.
 
     The localCheckpoint case matters separately (VERDICT r4 wrong #1):
     `spark.catalog.clearCache()` drops CacheManager entries but NOT

@@ -9,31 +9,24 @@ definition tiny (benchmarks are thousands of documents, not billions),
 so its distinct gram set fits the driver, and the corpus pass is ONE
 scan — no explode, no join, no corpus shuffle at all.
 
-Two engines, same answer (both gated by the same pytest; the driver
-oracle runs the textbook explode+join+group ANSI-SQL plan):
-
-- `engine="arrow"` (default, the 100 TB path): per-doc 8-gram 64-bit
-  hashes come from the shared vectorized kernel
-  (_minhash_kernel.batch_shingle_hashes — the same token/shingle math
-  the MinHash stage runs, bit-verified against the plain-Python spec),
-  the eval set's distinct hashes are collected once (driver-sized) and
-  broadcast, and one mapInArrow stage counts per-doc distinct matches
-  with sort+searchsorted — zero per-row Python, zero corpus shuffle.
-  Measured 97 s → 7 s at 150k docs vs the SQL engine: building 17M
-  gram STRINGS through interpreted HOF evaluation (~20 ms-core/doc)
-  was the cost, not the plan shape.
-- `engine="sql"` (pure-JVM reference formulation): distinct eval grams
-  as the build side of one broadcast hash join probed by the
-  scan-local exploded corpus grams (hash table built once per task),
-  per-doc count collapsed map-side to ~1 row/doc before the only
-  corpus-cardinality shuffle. Kept because it is the plan a SQL-only
-  engine would run and the direct mirror of the oracle.
+The corpus pass: per-doc 8-gram 64-bit hashes come from the shared
+vectorized kernel (_minhash_kernel.batch_shingle_hashes — the same
+token/shingle math the MinHash stage runs, bit-verified against the
+plain-Python spec), the eval set's distinct hashes are collected once
+(driver-sized) and broadcast, and one mapInArrow stage counts per-doc
+distinct matches with sort+searchsorted — zero per-row Python, zero
+corpus shuffle. Measured 97 s → 7 s at 150k docs against the earlier
+broadcast-hash-join plan over exploded gram STRINGS: building 17M
+gram strings through interpreted HOF evaluation (~20 ms-core/doc) was
+the cost, not the plan shape. The driver oracle runs the textbook
+explode+join+group ANSI-SQL plan; the plain-Python mirror is
+tests/refspec_dataprep.contamination.
 
 (An earlier shape — broadcast eval-gram ARRAY + scan-local
 `array_intersect` — was audited out: Catalyst's ArrayIntersect rebuilds
 the hash set of its argument PER ROW, O(corpus × eval) hash inserts.)
 
-Hash-vs-string exactness: the arrow engine counts distinct 64-bit gram
+Hash-vs-string exactness: the kernel counts distinct 64-bit gram
 hashes where the oracle counts distinct gram strings; they differ only
 on a 64-bit collision within one doc-or-eval gram set (~10^-19 per
 pair, deterministic, and the sf-scale oracle gate would surface it).
@@ -44,28 +37,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.column import Column
 
-from ocr_tool_spark.dataprep.dedup import tokens
 from ocr_tool_spark.operators.parallelism import ensure_parallelism_floor
-
-
-def word_ngrams(c: Column, n: int) -> Column:
-    """Distinct word n-grams of the normalized text as strings
-    ('w1 ... wn'); docs shorter than n words produce an empty array
-    (same convention as dedup.shingles)."""
-    t = tokens(c)
-    cnt = F.size(t)
-    return F.array_distinct(
-        F.when(
-            cnt >= n,
-            F.transform(
-                F.sequence(F.lit(1), cnt - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
 
 
 def _batch_gram_hashes(col: pa.Array, n: int):
@@ -140,56 +113,16 @@ def contamination(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_text_col: str | None = None,
-    engine: str = "arrow",
     max_eval_grams: int = 50_000_000,
 ) -> DataFrame:
     """(doc_id, n_shared_grams, contaminated): per corpus doc, how many
     of its distinct word n-grams appear anywhere in the eval set, and
     the ≥1-gram contamination flag. See the module docstring for the
-    two engines. `max_eval_grams` bounds the arrow engine's driver-side
-    eval-hash fetch (see _eval_gram_hashes)."""
-    ev_col = eval_text_col or text_col
-    if engine == "arrow":
-        return _contamination_arrow(
-            docs, eval_docs, n, id_col, text_col, ev_col, max_eval_grams
-        )
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r} (arrow|sql)")
-    ev = (
-        eval_docs.select(F.explode(word_ngrams(F.col(ev_col), n)).alias("gram"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
+    plan. `max_eval_grams` bounds the driver-side eval-hash fetch (see
+    _eval_gram_hashes)."""
+    ev_sorted = _eval_gram_hashes(
+        eval_docs, n, eval_text_col or text_col, max_eval_grams
     )
-    # the gram HOF chain costs ~1 ms/doc of JVM compute on a scan whose
-    # BYTES are tiny (compressed text) — an underfilled scan serializes
-    # it (measured 4.2 s on one task at sf0.1), so spread by compute,
-    # not bytes (min_bytes=0). No-op at scale: splits >> cores.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    doc_grams = ensure_parallelism_floor(docs, par).select(
-        id_col, F.explode_outer(word_ngrams(F.col(text_col), n)).alias("gram")
-    )
-    return (
-        doc_grams.join(F.broadcast(ev), "gram", "left")
-        .groupBy(id_col)
-        .agg(
-            F.coalesce(F.sum("_hit"), F.lit(0))
-            .cast("long")
-            .alias("n_shared_grams")
-        )
-        .withColumn("contaminated", (F.col("n_shared_grams") > 0).cast("int"))
-    )
-
-
-def _contamination_arrow(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int,
-    id_col: str,
-    text_col: str,
-    ev_col: str,
-    max_eval_grams: int = 50_000_000,
-) -> DataFrame:
-    ev_sorted = _eval_gram_hashes(eval_docs, n, ev_col, max_eval_grams)
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(ev_sorted)
     id_type = dict(zip(docs.schema.names, docs.schema.fields))[

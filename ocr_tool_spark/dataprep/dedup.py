@@ -1,17 +1,18 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, all expressed in native Spark SQL expressions (JVM-side,
-whole-stage-codegen'd; zero Python UDFs):
+Four families. Signatures come from vectorized Arrow kernels
+(mapInArrow over the shared _minhash_kernel: no per-row Python); the
+bucketing, pairing and verify joins are native Spark SQL expressions:
 
 - exact:      hash-groupBy on normalized text (md5 — cross-engine
               comparable, so the DuckDB oracle can replay it)
 - MinHash+LSH: word-shingles → H universal-hashed min signatures →
               banded bucket join → candidate pairs → exact-Jaccard
               verify. The classic Broder/LSH pipeline; at 100 TB the
-              only shuffles are the band groupBy and the final
-              distinct, and bucket size is capped to keep degenerate
-              buckets (boilerplate shingles) from exploding the
-              candidate join.
+              only corpus-sized shuffle is the band window (the pair
+              join and distinct move candidate-sized rows), and bucket
+              size is capped to keep degenerate buckets (boilerplate
+              shingles) from exploding the candidate join.
 - SimHash:    Charikar 64-bit signature via per-bit voting over token
               hashes; candidates share one of four 16-bit chunks
               (pigeonhole: hamming ≤ 3 ⇒ some chunk equal), verified
@@ -19,13 +20,12 @@ whole-stage-codegen'd; zero Python UDFs):
 - n-gram Jaccard: exact token-set Jaccard for candidate verification
               and for the SQL-checkable adjacent-pair query.
 
-All hashes are xxhash64 (Spark built-in) mixed with fixed odd
-multipliers — deterministic across runs and partitionings (J5).
+MinHash, SimHash and the embedding near-dup path (similarity.py) share
+one bucket-pair policy, bucket_pairs. All hashes are deterministic
+across runs and partitionings (J5).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,21 +48,6 @@ def tokens(c: Column) -> Column:
     return F.split(normalize_text(c), " ")
 
 
-def shingles(c: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles as strings ('w1 w2 w3')."""
-    t = tokens(c)
-    n = F.size(t)
-    return F.array_distinct(
-        F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(0), n - k),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, k)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", t)))
-    )
-
-
 # ---------------------------------------------------------------- exact
 
 
@@ -77,34 +62,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ------------------------------------------------------------- minhash
-
-
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 32, k: int = 3
-) -> DataFrame:
-    """(doc_id, _sh: distinct shingles, sig: array of num_hashes mins).
-
-    Three projection steps so each expensive expression is evaluated
-    exactly ONCE per row: shingle construction, then xxhash64 of every
-    shingle, then the num_hashes universal-hash min-folds as pure
-    integer arithmetic over the materialized hash array. (Inlining the
-    shingle expression into every lane re-evaluates it num_hashes
-    times — measured 30x slower.)"""
-    def lane(i: int) -> Column:
-        a, b = 2 * i + 1, 0x9E3779B9 * (i + 1) & 0x7FFFFFFF
-        return F.array_min(
-            F.transform("_hs", lambda x: F.pmod(x * a + b, F.lit(_P)))
-        )
-
-    return (
-        docs.select("doc_id", shingles(F.col(text_col), k).alias("_sh"))
-        .withColumn(
-            "_hs", F.transform("_sh", lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-        )
-        .select(
-            "doc_id", "_sh", F.array(*[lane(i) for i in range(num_hashes)]).alias("sig")
-        )
-    )
 
 
 def minhash_signatures_arrow(
@@ -129,10 +86,9 @@ def minhash_signatures_arrow(
 
     Tokenization matches normalize_text()'s Java `\\s+` exactly: the
     split class is the ASCII whitespace set (Python str.split() would
-    ALSO split Unicode whitespace like NBSP, diverging from the expr
-    engine and the Jaccard verify on real web text). The base hash
-    differs from the expression variant (polynomial vs xxhash64) —
-    engine-internal and irrelevant to LSH behavior; both deterministic
+    ALSO split Unicode whitespace like NBSP, diverging from the SQL
+    oracles on real web text). The base hash (polynomial + splitmix64)
+    is engine-internal, irrelevant to LSH behavior and deterministic
     across runs/partitionings (J5).
     """
     import numpy as np
@@ -251,42 +207,69 @@ def shingle_hash_sets(
     return docs.select(id_col, text_col).mapInArrow(fn, out_schema)
 
 
-def _banded_pairs(
-    banded: DataFrame, key_cols: list[str], max_bucket: int
-) -> DataFrame:
-    """Candidate pairs from bucket membership rows, scale-safe:
+def bucket_pairs(
+    members: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    max_bucket: int,
+    carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate pairs from bucket membership rows, scale-safe — the one
+    bucket-pair policy of the MinHash, SimHash and embedding near-dup
+    paths:
 
     - buckets with 2..max_bucket members → ALL pairs (self-join on the
-      bucket key, i<j);
-    - buckets with >max_bucket members → STAR pairs (min-doc_id
+      bucket key, id_a < id_b);
+    - buckets with >max_bucket members → STAR pairs (min-id
       representative × every member): O(n) pairs instead of O(n²), and
       connectivity to the canonical survivor is preserved — the
       boilerplate-duplicate buckets where near-dups concentrate are
       exactly the oversized ones, so dropping them (the r1 behavior)
       silently lost the recall that matters most.
 
+    Returns (pairs, ann). `pairs` has id_a, id_b and each `carry`
+    column of both sides as <col>_a / <col>_b, so the caller scores a
+    pair in place (hamming, cosine); a pair sharing several buckets
+    appears once per bucket, so callers dedupe after scoring. The
+    representative is min(struct(id, *carry)): ids are unique within a
+    bucket, so the struct order picks the min-id member and brings its
+    carried values along.
+
     Bucket stats come from a window over the bucket key (WindowExec
     buffers spill to disk — no collect_list of a 10^7-member degenerate
-    bucket ever materializes on one executor heap).
+    bucket ever materializes on one executor heap). `ann`, the
+    annotated multi-member frame, feeds both join sides and the star
+    branch, so it is persisted here (spill-safe MEMORY_AND_DISK); the
+    caller records it for release_intermediates.
     """
+    from pyspark import StorageLevel
+
     w = Window.partitionBy(*key_cols)
     ann = (
-        banded.withColumn("_n", F.count("*").over(w))
-        .withColumn("_rep", F.min("doc_id").over(w))
+        members.withColumn("_n", F.count("*").over(w))
+        .withColumn("_rep", F.min(F.struct(id_col, *carry)).over(w))
         .filter(F.col("_n") > 1)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    small = ann.filter(F.col("_n") <= max_bucket).select(*key_cols, "doc_id")
+
+    def side(prefix: str, s: str) -> list[Column]:
+        return [
+            F.col(prefix + c).alias(f"{'id' if c == id_col else c}_{s}")
+            for c in (id_col, *carry)
+        ]
+
+    small = ann.filter(F.col("_n") <= max_bucket).select(*key_cols, id_col, *carry)
     small_pairs = (
         small.alias("a")
         .join(small.alias("b"), key_cols)
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(*side("a.", "a"), *side("b.", "b"))
     )
-    big_pairs = (
-        ann.filter((F.col("_n") > max_bucket) & (F.col("doc_id") != F.col("_rep")))
-        .select(F.col("_rep").alias("id_a"), F.col("doc_id").alias("id_b"))
-    )
-    return small_pairs.unionByName(big_pairs).distinct()
+    # the rep has the bucket-min id, so id_a < id_b holds by construction
+    big_pairs = ann.filter(
+        (F.col("_n") > max_bucket) & (F.col(id_col) != F.col(f"_rep.{id_col}"))
+    ).select(*side("_rep.", "a"), *side("", "b"))
+    return small_pairs.unionByName(big_pairs), ann
 
 
 def minhash_band_buckets(
@@ -342,15 +325,13 @@ def minhash_lsh_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_bucket: int = 64,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
-    Plan shape: one Arrow signature stage (or the pure-expression
-    variant with engine='expr') → explode bands (rows ×bands, each row
-    just (doc_id, band hash)) → scale-safe pair generation
-    (_banded_pairs: all-pairs for normal buckets, star pairs for
-    oversized ones) → exact-Jaccard verify. The verify step computes
+    Plan shape: one Arrow signature stage → explode bands (rows
+    ×bands, each row just (doc_id, band hash)) → scale-safe pair
+    generation (bucket_pairs: all-pairs for normal buckets, star pairs
+    for oversized ones) → exact-Jaccard verify. The verify step computes
     shingle sets ONLY for docs that appear in a candidate pair
     (left-semi prune): at 100 TB the candidate set is orders of
     magnitude smaller than the corpus, so the shingle arrays — the
@@ -359,14 +340,14 @@ def minhash_lsh_pairs(
     stage (shingle_hash_sets), not shingle strings: Jaccard values are
     identical absent a 2^-64 collision and the verify joins move long
     arrays, not wide string arrays (r4; VERDICT r3 next #3).
+
+    `_ocr_persisted[0]` is the persisted candidate-pair frame.
     """
     from pyspark import StorageLevel
 
-    if engine == "arrow":
-        sigs = minhash_signatures_arrow(docs, text_col, num_hashes, k)
-    else:
-        sigs = minhash_signatures(docs, text_col, num_hashes, k).select("doc_id", "sig")
+    sigs = minhash_signatures_arrow(docs, text_col, num_hashes, k)
     banded = minhash_band_buckets(sigs, num_hashes, bands)
+    pairs, ann = bucket_pairs(banded, ["band", "bucket"], "doc_id", max_bucket)
     # the candidate set has two consumers (id extraction, final
     # join) and the shingle frame two (self-join sides): without a
     # persist each consumer re-executes the whole upstream subtree —
@@ -374,9 +355,7 @@ def minhash_lsh_pairs(
     # tiny end of the funnel at any scale) and spill-safe
     # (MEMORY_AND_DISK); this is the materialize-the-candidates step
     # every at-scale LSH dedup performs.
-    cand = _banded_pairs(banded, ["band", "bucket"], max_bucket).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    cand = pairs.distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
     # no .distinct() on the broadcast side: left_semi ignores probe-side
     # duplicates, and the dedup shuffle cost more than broadcasting a
@@ -407,7 +386,7 @@ def minhash_lsh_pairs(
     )
     # caller-owned cache handles: dataprep.release_intermediates(out)
     # unpersists them once the result is materialized (ADVICE r3)
-    out._ocr_persisted = [cand, sh]  # noqa: SLF001
+    out._ocr_persisted = [cand, sh, ann]  # noqa: SLF001
     return out
 
 
@@ -471,79 +450,18 @@ def simhash_signatures_arrow(
     return sel.mapInArrow(fn, out_schema)
 
 
-def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "sig") -> DataFrame:
-    """Add a Charikar 64-bit simhash column (signed long). Two
-    projections: the per-bit vote fold, then the bit assembly — kept as
-    separate selects so the 64-lane vote expression appears exactly
-    once in the plan instead of 64 times."""
-    return df.withColumn("_votes", _vote_expr(F.col(text_col))).withColumn(
-        out_col, _sig_from_votes(F.col("_votes"))
-    ).drop("_votes")
-
-
-def _vote_expr(c: Column) -> Column:
-    """Per-bit vote: +1 if token-hash bit set else -1, summed over the
-    token multiset → array<int> of 64 vote totals."""
-    hashes = F.transform(tokens(c), lambda t: F.xxhash64(t))
-    # shift amounts must be literals, so the 64 bit-lanes are unrolled
-    # Python-side into one array constructor (still a single JVM expr)
-    return F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-                    ).otherwise(-1)
-                    for j in range(64)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-
-
-def _sig_from_votes(votes: Column) -> Column:
-    sig = F.lit(0).cast("long")
-    for j in range(64):
-        sig = sig.bitwiseOR(
-            F.when(
-                F.element_at(votes, j + 1) > 0,
-                F.lit(1 << j if j < 63 else -(1 << 63)).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 def simhash_pairs(
     docs: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket: int = 64,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs with hamming(sig_a, sig_b) ≤ max_hamming.
     Candidates via 16-bit chunk equality (4 chunks; hamming ≤ 3 over 64
-    bits ⇒ at least one chunk identical — pigeonhole-complete).
-
-    engine='arrow' (default): numpy popcount-vote kernel, the spec-
-    mirrored production path. engine='expr': the pure-JVM xxhash64
-    64-lane vote expression (with_simhash) — different engine-internal
-    base hash, same pairing semantics; kept as the zero-Python face."""
-    from pyspark import StorageLevel
-
-    # the chunked frame feeds a self-join (2 sides) plus the star-pair
-    # branch: persist the narrow (doc_id, sig) frame so the signature
-    # stage — the expensive part — runs once per doc, not 3×
-    if engine == "arrow":
-        sigs = simhash_signatures_arrow(docs.select("doc_id", text_col), text_col)
-    else:
-        sigs = with_simhash(docs.select("doc_id", text_col), text_col).select(
-            "doc_id", "sig"
-        )
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    bits ⇒ at least one chunk identical — pigeonhole-complete), paired
+    by bucket_pairs with each member's sig carried, so hamming is
+    computed in place."""
+    sigs = simhash_signatures_arrow(docs.select("doc_id", text_col), text_col)
     chunked = sigs.select(
         "doc_id",
         "sig",
@@ -556,42 +474,20 @@ def simhash_pairs(
             )
         ).alias("chunk_idx", "chunk"),
     )
-    # same scale-safe bucket policy as _banded_pairs (all pairs for
-    # normal buckets, star pairs to the min-doc_id representative for
-    # oversized ones), carrying each member's sig so hamming is computed
-    # in place — no collect_list of a degenerate bucket ever exists
-    w = Window.partitionBy("chunk_idx", "chunk")
-    ann = (
-        chunked.withColumn("_n", F.count("*").over(w))
-        .withColumn("_rep", F.min(F.struct("doc_id", "sig")).over(w))
-        .filter(F.col("_n") > 1)
-    )
-    small = ann.filter(F.col("_n") <= max_bucket).select("chunk_idx", "chunk", "doc_id", "sig")
-    small_pairs = (
-        small.alias("a")
-        .join(small.alias("b"), ["chunk_idx", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
-        )
-    )
-    big_pairs = (
-        ann.filter((F.col("_n") > max_bucket) & (F.col("doc_id") != F.col("_rep.doc_id")))
-        .select(
-            F.col("_rep.doc_id").alias("id_a"),
-            F.col("doc_id").alias("id_b"),
-            F.bit_count(F.col("_rep.sig").bitwiseXOR(F.col("sig"))).alias("hamming"),
-        )
+    pairs, ann = bucket_pairs(
+        chunked, ["chunk_idx", "chunk"], "doc_id", max_bucket, carry=("sig",)
     )
     out = (
-        small_pairs.unionByName(big_pairs)
+        pairs.select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
+        )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
     # caller-owned cache handle (see minhash_lsh_pairs / ADVICE r3)
-    out._ocr_persisted = [sigs]  # noqa: SLF001
+    out._ocr_persisted = [ann]  # noqa: SLF001
     return out
 
 
@@ -637,7 +533,7 @@ def pair_components(
     Algorithm: min-label propagation to fixpoint — per round each node
     takes the min label among itself and its neighbors (one join + one
     groupBy per round, both on the edge key), converging in O(graph
-    diameter) rounds; star-capped buckets (_banded_pairs) keep
+    diameter) rounds; star-capped buckets (bucket_pairs) keep
     diameters ~2, so real corpora converge in a handful of rounds.
     Each round localCheckpoints its label frame to truncate lineage —
     the standard Spark iterative-graph discipline (GraphX/GraphFrames

@@ -18,9 +18,10 @@ bounds any single bucket's share of probes.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ocr_tool_spark.dataprep.dedup import bucket_pairs
 
 
 def _f8(c: Column) -> Column:
@@ -89,38 +90,6 @@ def brute_topk(
     )
 
 
-def hyperplane_signature(vec: Column, dim: int, n_bits: int = 16, seed: int = 7) -> Column:
-    """Random-hyperplane (SRP) signature: bit_j = [vec · h_j > 0], with
-    h_j's components drawn deterministically from xxhash64(seed, j, i)
-    mapped to {-1..1} — a 2-universal stand-in for Gaussians that
-    preserves the cosine-LSH property in practice.
-
-    NOTE: pure-expression reference implementation. The production
-    paths (lsh_topk, near_dup_pairs) use srp_signatures — the
-    n_tables × n_bits × dim literal expression tree built here costs
-    ~20 s of Catalyst compile time per query, dwarfing execution."""
-    def comp(j: int, i: int) -> Column:
-        h = F.xxhash64(F.lit(seed), F.lit(j), F.lit(i))
-        return (F.pmod(h, F.lit(2001)) - 1000).cast("double") / 1000.0
-
-    def bit(j: int) -> Column:
-        d = F.aggregate(
-            F.zip_with(
-                _f8(vec),
-                F.array(*[comp(j, i) for i in range(dim)]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(d > 0, F.shiftleft(F.lit(1), j)).otherwise(F.lit(0))
-
-    out = F.lit(0)
-    for j in range(n_bits):
-        out = out.bitwiseOR(bit(j))
-    return out
-
-
 def srp_signatures(
     embeddings: DataFrame,
     dim: int,
@@ -133,13 +102,8 @@ def srp_signatures(
     """(id, vec, _b0.._b{n_tables-1}) — one vectorized Arrow stage:
     per table t, a deterministic Gaussian hyperplane matrix H_t
     (np.random.default_rng(seed+t), the textbook SRP construction) and
-    bits = sign(V @ H_tᵀ) packed into an int32 bucket id.
-
-    This replaces per-bit JVM expressions (hyperplane_signature): the
-    expression tree there is n_tables × n_bits × dim literal terms,
-    which costs ~20 s of Catalyst/codegen compile time per query —
-    more than the data itself at any tested scale. The numpy matmul is
-    a single BLAS call per batch and the plan stays tiny."""
+    bits = sign(V @ H_tᵀ) packed into an int32 bucket id. The numpy
+    matmul is a single BLAS call per batch and the plan stays tiny."""
     import numpy as np
     import pyarrow as pa
 
@@ -546,11 +510,11 @@ def near_dup_pairs(
     regions — boilerplate pages, zero/near-zero vectors — can put 10^6
     vectors in one SRP bucket, and an uncapped self-join there is
     5·10^11 candidate pairs. Same policy as the MinHash/SimHash paths
-    (dedup._banded_pairs): buckets with ≤ max_bucket members get all
+    (dedup.bucket_pairs): buckets with ≤ max_bucket members get all
     pairs; larger buckets get STAR pairs to the min-id representative —
     O(n) pairs, and every member stays connected to the canonical
-    survivor (which is what dedup consumes the pair graph for). Bucket
-    stats come from a window (spill-safe), never a collect_list."""
+    survivor (which is what dedup consumes the pair graph for). Each
+    member carries its vector and norm, so cosine is scored in place."""
     if block_col is not None:
         e = embeddings.select(
             F.col(id_col).alias("id"),
@@ -577,46 +541,18 @@ def near_dup_pairs(
     # the per-pair HOF work disappears (the pair count dwarfs the
     # member count in every blocked self-join).
     e = e.withColumn("_nv", norm(F.col("v")))
-    # star-pairing needs each member's vector alongside the
-    # representative's, so the rep is carried as a (id, v, _nv)
-    # struct — ordering compares id first and ids are unique, so
-    # min() picks the min-id member (the simhash_pairs pattern)
-    w = Window.partitionBy("tbl", "blk")
-    ann = (
-        e.withColumn("_n", F.count("*").over(w))
-        .withColumn("_rep", F.min(F.struct("id", "v", "_nv")).over(w))
-        .filter(F.col("_n") > 1)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # three consumers (both self-join sides + big_pairs) would re-run
-    # the SRP signature stage + window 3x without the persist; the
-    # frame is multi-member bucket rows only, spill-safe, and released
-    # by the caller via release_intermediates (ADVICE r3 pattern)
-    def _cos(av, an, bv, bn):
-        return F.round(cosine_with_norms(av, an, bv, bn), 6)
-
-    small = ann.filter(F.col("_n") <= max_bucket).select("tbl", "blk", "id", "v", "_nv")
-    a, b = small.alias("a"), small.alias("b")
-    small_pairs = (
-        a.join(b, ["tbl", "blk"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            _cos(F.col("a.v"), F.col("a._nv"), F.col("b.v"), F.col("b._nv")).alias("cos_sim"),
-        )
-    )
-    # rep has the bucket-min id, so id_a < id_b holds by construction
-    big_pairs = (
-        ann.filter((F.col("_n") > max_bucket) & (F.col("id") != F.col("_rep.id")))
-        .select(
-            F.col("_rep.id").alias("id_a"),
-            F.col("id").alias("id_b"),
-            _cos(F.col("_rep.v"), F.col("_rep._nv"), F.col("v"), F.col("_nv")).alias("cos_sim"),
-        )
-    )
+    pairs, ann = bucket_pairs(e, ["tbl", "blk"], "id", max_bucket, carry=("v", "_nv"))
     out = (
-        small_pairs.unionByName(big_pairs)
+        pairs.select(
+            "id_a",
+            "id_b",
+            F.round(
+                cosine_with_norms(
+                    F.col("v_a"), F.col("_nv_a"), F.col("v_b"), F.col("_nv_b")
+                ),
+                6,
+            ).alias("cos_sim"),
+        )
         .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )

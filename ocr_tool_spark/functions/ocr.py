@@ -123,29 +123,11 @@ def order_blocks(blocks: list[tuple[int, int, int, int]]) -> list[tuple[int, int
     return [tuple(int(v) for v in row) for row in final]
 
 
-_CROP_CACHE: dict[tuple[int, int, bytes], str | None] = {}
-_CROP_CACHE_MAX = 4096  # glyph variety is tiny; cap guards weird inputs
+_CODE_CACHE_MAX = 4096  # glyph variety is tiny; cap guards weird inputs
 # column-bitcode cache: each band column packs to ceil(h/8) bytes
 # (np.packbits along rows), so (band_height, code_byte_slice) is
 # bijective with the raw 2-D crop at any height — see read_block
 _CODE_CACHE: dict[tuple[int, bytes], str | None] = {}
-
-
-def _char_of(run_crop: np.ndarray) -> str | None:
-    """Char for one ink run, memoized on the RAW crop bytes: the
-    trimmed-pattern key costs ~20 numpy calls on a 7x5 array, and a
-    worker sees the same few dozen glyph crops millions of times —
-    profiled at 70% of read_media before caching. (Kept for callers
-    with single crops; read_block's hot loop uses the cheaper
-    column-bitcode key below.)"""
-    key = (run_crop.shape[0], run_crop.shape[1], run_crop.tobytes())
-    try:
-        return _CROP_CACHE[key]
-    except KeyError:
-        ch = TEMPLATES.get(trimmed_pattern(run_crop.astype(np.uint8)))
-        if len(_CROP_CACHE) < _CROP_CACHE_MAX:
-            _CROP_CACHE[key] = ch
-        return ch
 
 
 def read_block(page: np.ndarray, bbox: tuple[int, int, int, int]) -> str:
@@ -182,7 +164,7 @@ def read_block(page: np.ndarray, bbox: tuple[int, int, int, int]) -> str:
                 ch = TEMPLATES.get(
                     trimmed_pattern(band[:, cs:ce].astype(np.uint8))
                 )
-                if len(_CODE_CACHE) < _CROP_CACHE_MAX:
+                if len(_CODE_CACHE) < _CODE_CACHE_MAX:
                     _CODE_CACHE[key] = ch
             if ch is not None:
                 chars.append(ch)

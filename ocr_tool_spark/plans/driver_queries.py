@@ -1712,14 +1712,12 @@ def q_decontam(spark, sf):
     """K20 benchmark decontamination: per-doc count of distinct 8-word
     grams shared with an eval set (here: the deterministic doc_id%97
     slice of the corpus, so the eval docs themselves and their planted
-    near-dups must flag). Engine: the DEFAULT arrow kernel path —
-    vectorized 64-bit gram hashes (shared minhash kernel), eval hashes
-    collected once (driver-budget-capped) and broadcast, one
-    mapInArrow sort+searchsorted pass; zero corpus shuffle, zero
-    per-row Python. The pure-JVM broadcast-hash-join formulation
-    remains selectable as engine="sql". Oracle: the textbook
-    explode + join + group plan. Same answer, three different plans
-    (dataprep/decontam.py)."""
+    near-dups must flag). Engine: vectorized 64-bit gram hashes
+    (shared minhash kernel), eval hashes collected once
+    (driver-budget-capped) and broadcast, one mapInArrow
+    sort+searchsorted pass; zero corpus shuffle, zero per-row Python.
+    Oracle: the textbook explode + join + group plan. Same answer, two
+    different plans (dataprep/decontam.py)."""
     from ocr_tool_spark.dataprep.decontam import contamination
 
     docs = load_table(spark, sf, "documents")

@@ -152,34 +152,6 @@ class PipelineRunner:
         if os.path.exists(done):
             with open(done) as f:
                 staged_fp = f.read().strip()
-            if staged_fp == "ok":
-                # pre-fingerprint stage dir (marker format up to r2):
-                # the raw bytes can't be fingerprint-verified, but a
-                # cheap content sample CAN be checked before adopting —
-                # blind adoption would permanently mask the wrong-input
-                # mismatch this guard exists to catch (ADVICE r3):
-                # count + doc_id envelope, one tiny agg job per side
-                import warnings
-
-                staged_df = self.spark.read.parquet(stage)
-                probe = lambda df: df.select(  # noqa: E731
-                    F.count("*"), F.min("doc_id"), F.max("doc_id")
-                ).collect()[0]
-                s, i = probe(staged_df), probe(docs)
-                if tuple(s) != tuple(i):
-                    raise ValueError(
-                        f"staged input at {stage} has a legacy 'ok' marker and "
-                        f"its content sample {tuple(s)} does not match this "
-                        f"input {tuple(i)}; delete the stage dir or use a "
-                        "distinct run_id per input"
-                    )
-                warnings.warn(
-                    f"stage dir {stage} has a legacy 'ok' marker; content "
-                    "sample matches this input — upgrading the marker"
-                )
-                with open(done, "w") as f:
-                    f.write(fp)
-                staged_fp = fp
             if staged_fp != fp:
                 raise ValueError(
                     f"staged input at {stage} was built from a different input "

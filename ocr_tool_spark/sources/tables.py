@@ -17,10 +17,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in ORACLE_TABLES}
-
-
 _BOILER_PREFIX = (
     "<html><body><header><h1>site title</h1></header>"
     "<nav><ul><li><a>home</a></li><li><a>about</a></li><li><a>contact</a></li></ul></nav>"

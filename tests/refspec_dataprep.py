@@ -2,7 +2,7 @@
 
 Companion to refspec.py (the extraction spec): per-document loops and
 python ints/floats replaying, bit-for-bit, what the Spark operators in
-ocr_tool_spark/dataprep/{dedup,similarity}.py compute — so the
+ocr_tool_spark/dataprep/{dedup,similarity,decontam}.py compute — so the
 generated VALUES oracles in plans/driver_queries.py can hash-check the
 "approximate" operators too. These ops are approximate with respect to
 RECALL, but their OUTPUT is a pure deterministic function of the input
@@ -118,14 +118,6 @@ def tokens(s: str) -> list[str]:
     return normalize_text(s).split(" ")
 
 
-def shingle_set(s: str, k: int = 3) -> frozenset[str]:
-    """Mirror of dedup.shingles(): distinct word-k-shingle strings."""
-    t = tokens(s)
-    if len(t) >= k:
-        return frozenset(" ".join(t[i : i + k]) for i in range(len(t) - k + 1))
-    return frozenset({" ".join(t)})
-
-
 def spark_round(x: float, scale: int = 6) -> float:
     """Spark Round(double, s): BigDecimal.valueOf(x) (shortest-decimal
     repr) -> setScale(s, HALF_UP) -> double."""
@@ -212,7 +204,7 @@ def minhash_signature(text: str, num_hashes: int = 32, k: int = 3) -> tuple[int,
 def _bucket_pairs(
     buckets: dict[object, list[int]], max_bucket: int
 ) -> set[tuple[int, int]]:
-    """Mirror of dedup._banded_pairs: all pairs for buckets of size
+    """Mirror of dedup.bucket_pairs: all pairs for buckets of size
     2..max_bucket, star pairs to the min-id representative above."""
     pairs: set[tuple[int, int]] = set()
     for members in buckets.values():
@@ -238,7 +230,7 @@ def minhash_pairs(
     k: int = 3,
     max_bucket: int = 64,
 ) -> list[tuple[int, int, float]]:
-    """Mirror of dedup.minhash_lsh_pairs (arrow engine): returns
+    """Mirror of dedup.minhash_lsh_pairs: returns
     (id_a, id_b, round(jaccard, 6)) sorted by (id_a, id_b).
 
     Buckets are keyed on the raw (band, signature-slice) tuple —
@@ -265,21 +257,6 @@ def minhash_pairs(
 # ------------------------------------------------------------- SimHash
 
 
-def simhash(text: str) -> int:
-    """Mirror of dedup.with_simhash: signed 64-bit Charikar signature
-    from per-token xxhash64 bit votes (token multiset)."""
-    votes = [0] * 64
-    for tok in tokens(text):
-        u = xxh64(tok.encode("utf-8"), 42)
-        for j in range(64):
-            votes[j] += 1 if (u >> j) & 1 else -1
-    sig = 0
-    for j in range(64):
-        if votes[j] > 0:
-            sig |= 1 << j
-    return signed64(sig)
-
-
 def simhash_kernel(text: str) -> int:
     """Mirror of dedup.simhash_signatures_arrow (the r4 production
     path): Charikar votes over the minhash kernel's polynomial token
@@ -298,8 +275,7 @@ def simhash_kernel(text: str) -> int:
 def simhash_pairs(
     docs: list[tuple[int, str]], max_hamming: int = 3, max_bucket: int = 64
 ) -> list[tuple[int, int, int]]:
-    """Mirror of dedup.simhash_pairs (arrow engine): (id_a, id_b,
-    hamming) sorted."""
+    """Mirror of dedup.simhash_pairs: (id_a, id_b, hamming) sorted."""
     sigs = {i: simhash_kernel(t) for i, t in docs}
 
     def u64(x: int) -> int:
@@ -315,6 +291,28 @@ def simhash_pairs(
         ham = bin(u64(sigs[a]) ^ u64(sigs[b])).count("1")
         if ham <= max_hamming:
             out.append((a, b, ham))
+    return out
+
+
+# ------------------------------------------------------------ decontam
+
+
+def contamination(
+    docs: list[tuple[int, str]], evals: list[tuple[int, str]], n: int = 8
+) -> list[tuple[int, int, int]]:
+    """Mirror of decontam.contamination: (doc_id, n_shared_grams,
+    contaminated) sorted by doc_id. Grams are distinct n-token strings
+    over the kernel's tokens; a doc shorter than n tokens has none."""
+
+    def grams(text: str) -> set[str]:
+        t = _kernel_tokens(text)
+        return {" ".join(t[i : i + n]) for i in range(len(t) - n + 1)}
+
+    ev = set().union(*(grams(t) for _, t in evals))
+    out = []
+    for i, t in sorted(docs):
+        shared = len(grams(t) & ev)
+        out.append((i, shared, int(shared > 0)))
     return out
 
 

@@ -73,7 +73,7 @@ def test_simhash_order_invariance(spark):
         [(1, "alpha bravo charlie delta"), (2, "delta charlie bravo alpha")],
         "doc_id long, text string",
     )
-    sigs = {r.doc_id: r.sig for r in dedup.with_simhash(d).collect()}
+    sigs = {r.doc_id: r.sig for r in dedup.simhash_signatures_arrow(d).collect()}
     assert sigs[1] == sigs[2]
 
 
@@ -290,7 +290,7 @@ def test_minhash_bucket_stats_surface_oversize(spark):
 
 
 def test_ocr_glyph_cache_handles_unknown_crops(spark):
-    """The glyph crop cache must stay bounded and correct on inputs
+    """The glyph code cache must stay bounded and correct on inputs
     full of unknown (non-template) ink patterns — noise pages produce
     arbitrary crops that must neither crash nor evict known glyphs
     into wrong answers."""
@@ -303,7 +303,7 @@ def test_ocr_glyph_cache_handles_unknown_crops(spark):
     noise = (rng.random((40, 60)) < 0.35).astype(np.uint8) * 255
     out_noise = ocr.read_media(noise.tobytes(), 60, 40, 1)
     assert isinstance(out_noise, str)  # unknown runs skipped, no crash
-    assert len(ocr._CROP_CACHE) <= ocr._CROP_CACHE_MAX
+    assert len(ocr._CODE_CACHE) <= ocr._CODE_CACHE_MAX
     line = render_line("HELLO 42")
     page = np.zeros((line.shape[0] + 4, line.shape[1] + 4), dtype=np.uint8)
     page[2 : 2 + line.shape[0], 2 : 2 + line.shape[1]] = line
@@ -333,19 +333,6 @@ def test_minhash_arrow_signatures_partitioning_invariant(spark):
     assert sigs[1] == sigs[7]
     assert sigs[1][0] == sigs[1][1]  # same text, same signature
     assert all(len(s) == 32 for s in sigs[1].values())
-
-
-def test_minhash_expr_engine_matches_arrow_on_planted(spark):
-    """Both signature engines (vectorized Arrow, pure JVM expressions)
-    recover the identical planted dup/near-dup pair set."""
-    d = _mk_docs(spark)
-    arrow = {(r.id_a, r.id_b) for r in
-             dedup.minhash_lsh_pairs(d, threshold=0.5, engine="arrow").collect()}
-    expr = {(r.id_a, r.id_b) for r in
-            dedup.minhash_lsh_pairs(d, threshold=0.5, engine="expr").collect()}
-    planted_core = {(i, 1000 + i) for i in range(10)} | {(i, 2000 + i) for i in range(5)}
-    assert planted_core <= arrow
-    assert planted_core <= expr
 
 
 def test_simhash_oversized_bucket_star_pairs(spark):
@@ -512,22 +499,55 @@ def test_dedup_keep_list_marks_canonicals(spark):
 
 
 def test_release_intermediates_unpersists_lsh_caches(spark):
-    """ADVICE r3: the multi-consumer caches minhash/simhash pin must be
-    caller-releasable so a long-lived session doesn't accumulate
-    MEMORY_AND_DISK blocks across distinct inputs."""
+    """ADVICE r3: the multi-consumer caches the MinHash, SimHash and
+    embedding near-dup paths pin must be caller-releasable so a
+    long-lived session doesn't accumulate MEMORY_AND_DISK blocks
+    across distinct inputs."""
     from ocr_tool_spark.dataprep import release_intermediates
 
     docs = [(i, f"alpha beta gamma delta {i % 5} epsilon") for i in range(40)]
     d = spark.createDataFrame(docs, "doc_id long, text string")
-    out = dedup.minhash_lsh_pairs(d, threshold=0.5)
-    out.count()
-    handles = out._ocr_persisted
-    assert handles and all(h.storageLevel.useMemory for h in handles)
-    release_intermediates(out)
-    assert all(not h.storageLevel.useMemory for h in handles)
-    # idempotent and safe on frames without handles
-    release_intermediates(out)
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=8)
+    e = spark.createDataFrame(
+        [(i, [float(x) for x in base + rng.normal(scale=0.01, size=8)]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    for out in (
+        dedup.minhash_lsh_pairs(d, threshold=0.5),
+        dedup.simhash_pairs(d),
+        similarity.near_dup_pairs(e, dim=8, n_bits=4, n_tables=2),
+    ):
+        out.count()
+        handles = out._ocr_persisted
+        assert handles and all(h.storageLevel.useMemory for h in handles)
+        release_intermediates(out)
+        assert all(not h.storageLevel.useMemory for h in handles)
+        # idempotent
+        release_intermediates(out)
+    # safe on frames without handles
     release_intermediates(d)
+
+
+def test_minhash_first_handle_is_the_candidate_frame(spark):
+    """The first persisted handle of minhash_lsh_pairs is the distinct
+    candidate-pair frame (callers count candidates from it): its pair
+    set equals the plain-Python spec's bucket-pair candidates."""
+    import refspec_dataprep as spec
+
+    d = _mk_docs(spark)
+    out = dedup.minhash_lsh_pairs(d, threshold=0.5)
+    cand = out._ocr_persisted[0]
+    assert cand.storageLevel.useMemory
+    assert cand.columns == ["id_a", "id_b"]
+    got = [(r.id_a, r.id_b) for r in cand.collect()]
+    buckets: dict[object, list[int]] = {}
+    for r in d.collect():
+        sig = spec.minhash_signature(r.text)
+        for b in range(8):
+            buckets.setdefault((b, sig[4 * b : 4 * b + 4]), []).append(r.doc_id)
+    assert len(got) == len(set(got))
+    assert set(got) == spec._bucket_pairs(buckets, 64)
 
 
 def test_near_dup_degenerate_bucket_is_star_capped(spark):
@@ -623,26 +643,37 @@ def test_ivf_search_keeps_id_collisions_for_external_queries(spark, sf_dir_mid, 
 
 
 def test_banded_pairs_invariants(spark):
-    """_banded_pairs structural invariants on a synthetic membership
-    frame mixing normal and oversized buckets: (1) id_a < id_b always;
-    (2) a bucket at/below cap yields ALL its pairs; (3) an oversized
-    bucket yields exactly star pairs to its min member — every member
-    connected, no quadratic blowup."""
+    """bucket_pairs structural invariants on a synthetic membership
+    frame mixing normal and oversized buckets, with one carried column:
+    (1) id_a < id_b always; (2) a bucket at/below cap yields ALL its
+    pairs; (3) an oversized bucket yields exactly star pairs to its min
+    member — every member connected, no quadratic blowup; (4) every
+    pair carries each side's own value, so a star pair's `a` side holds
+    the min member's value."""
     rows = []
     # bucket A (band 0, bucket 100): 4 members -> all 6 pairs
     for d in [3, 1, 7, 5]:
-        rows.append((d, 0, 100))
+        rows.append((d, 0, 100, 10 * d))
     # bucket B (band 1, bucket 200): 10 members, cap 4 -> 9 star pairs
     for d in range(20, 30):
-        rows.append((d, 1, 200))
-    banded = spark.createDataFrame(rows, "doc_id long, band int, bucket long")
-    pairs = {(r.id_a, r.id_b) for r in
-             dedup._banded_pairs(banded, ["band", "bucket"], max_bucket=4).collect()}
+        rows.append((d, 1, 200, 10 * d))
+    banded = spark.createDataFrame(
+        rows, "doc_id long, band int, bucket long, val long"
+    )
+    pairs, ann = dedup.bucket_pairs(
+        banded, ["band", "bucket"], "doc_id", max_bucket=4, carry=("val",)
+    )
+    assert pairs.columns == ["id_a", "val_a", "id_b", "val_b"]
+    got = pairs.collect()
+    assert all(r.val_a == 10 * r.id_a and r.val_b == 10 * r.id_b for r in got)
+    pairs = {(r.id_a, r.id_b) for r in got}
     assert all(a < b for a, b in pairs)
     a_pairs = {p for p in pairs if p[0] < 20}
     assert a_pairs == {(1, 3), (1, 5), (1, 7), (3, 5), (3, 7), (5, 7)}
     b_pairs = {p for p in pairs if p[0] >= 20}
     assert b_pairs == {(20, d) for d in range(21, 30)}
+    assert ann.storageLevel.useMemory
+    ann.unpersist()
 
 
 def test_srp_signatures_zero_copy_and_contract_guard(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_tool_spark.dataprep.decontam import contamination, word_ngrams
+from ocr_tool_spark.dataprep.decontam import contamination
 
 EVAL_TEXT = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
 
@@ -56,10 +56,13 @@ def test_contamination_empty_eval_set(spark, corpus):
 
 
 def test_engines_agree_incl_fallback(spark):
-    """The arrow kernel engine and the SQL gram-string engine must
-    produce identical rows — including non-ASCII texts (the kernel's
-    Python-string fallback), docs shorter than n, empty docs, and
-    within-doc repeated grams (distinct-count semantics)."""
+    """The arrow kernel must equal the plain-Python spec
+    (refspec_dataprep.contamination) row for row — including non-ASCII
+    texts (the kernel's Python-string fallback), docs shorter than n
+    (even one whose tokens all occur in the eval text), empty docs,
+    and within-doc repeated grams (distinct-count semantics)."""
+    import refspec_dataprep as spec
+
     base = "héllo wörld alpha bravo charlie delta echo foxtrot golf"
     rows = [
         (1, base + " hotel india"),
@@ -67,33 +70,18 @@ def test_engines_agree_incl_fallback(spark):
         (3, "short doc only"),
         (4, ""),
         (5, "ASCII only aaa bbb ccc ddd eee fff ggg hhh iii jjj"),
+        (6, "héllo wörld alpha"),
     ]
+    ev_rows = [(9, base + " hotel india")]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    ev = spark.createDataFrame([(9, base + " hotel india")], "doc_id long, text string")
-    key = lambda df: sorted(  # noqa: E731
-        (r["doc_id"], r["n_shared_grams"], r["contaminated"]) for r in df.collect()
-    )
-    a = key(contamination(corpus, ev, n=8, engine="arrow"))
-    s = key(contamination(corpus, ev, n=8, engine="sql"))
-    assert a == s
-    assert a[0][1] > 0  # doc 1 overlaps the eval passage
-
-
-def test_word_ngrams_edge_cases(spark):
-    df = _df(
-        spark,
-        [
-            (1, "a b c"),
-            (2, "  A   b  "),  # normalization: lowercase + collapse ws
-            (3, "x y"),
-            (4, ""),
-        ],
-    ).select("doc_id", word_ngrams(F.col("text"), 2).alias("g"))
-    got = {r["doc_id"]: r["g"] for r in df.collect()}
-    assert got[1] == ["a b", "b c"]
-    assert got[2] == ["a b"]
-    assert got[3] == ["x y"]
-    assert got[4] == []
+    ev = spark.createDataFrame(ev_rows, "doc_id long, text string")
+    for n in (3, 8):
+        got = sorted(
+            (r["doc_id"], r["n_shared_grams"], r["contaminated"])
+            for r in contamination(corpus, ev, n=n).collect()
+        )
+        assert got == spec.contamination(rows, ev_rows, n=n), n
+        assert got[0][1] > 0  # doc 1 overlaps the eval passage
 
 
 def test_eval_budget_guard_rejects_corpus_sized_eval(spark, corpus):

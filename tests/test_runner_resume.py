@@ -114,12 +114,11 @@ def test_stale_stage_different_input_fails_loudly(spark, tmp_path):
         runner.run(docs_df(spark, docs_b), run_id="pinned")
 
 
-def test_legacy_ok_stage_marker_is_adopted(spark, tmp_path):
-    """A stage dir written before the fingerprint marker existed holds
-    the literal 'ok': resuming must adopt it (warn + rewrite with the
-    computed fingerprint), not raise a migration error (ADVICE r2)."""
+def test_ok_stage_marker_fails_loudly(spark, tmp_path):
+    """A stage dir whose marker holds the literal 'ok' (the format
+    before fingerprints) has no input fingerprint to check, so resuming
+    it raises — even when the staged data matches the input."""
     import os
-    import warnings
 
     docs, _ = fixtures.gen_corpus(8, seed=1)
     runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=2)
@@ -127,30 +126,11 @@ def test_legacy_ok_stage_marker_is_adopted(spark, tmp_path):
     runner.run(d, run_id="pinned")
     marker = os.path.join(runner._stage_dir("pinned"), "_STAGED")
     with open(marker, "w") as f:
-        f.write("ok")  # simulate the pre-upgrade marker format
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        runner.run(d, run_id="pinned")  # must not raise
-    assert any("legacy 'ok' marker" in str(x.message) for x in w)
-    with open(marker) as f:
-        assert f.read().strip() != "ok"  # upgraded to the fingerprint
-
-
-def test_legacy_ok_marker_with_wrong_content_fails_loudly(spark, tmp_path):
-    """ADVICE r3: a legacy 'ok' marker is only adopted after a content
-    sample (count + doc_id envelope) matches the CURRENT input; staged
-    data from a different corpus must raise, not be silently merged."""
-    import os
-
-    docs_a, _ = fixtures.gen_corpus(8, seed=1)
-    docs_b, _ = fixtures.gen_corpus(12, seed=2)
-    runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=2)
-    runner.run(docs_df(spark, docs_a), run_id="pinned")
-    marker = os.path.join(runner._stage_dir("pinned"), "_STAGED")
-    with open(marker, "w") as f:
         f.write("ok")
-    with pytest.raises(ValueError, match="content sample"):
-        runner.run(docs_df(spark, docs_b), run_id="pinned")
+    with pytest.raises(ValueError, match="different input"):
+        runner.run(d, run_id="pinned")
+    with pytest.raises(ValueError, match="different input"):
+        runner.run(docs_df(spark, fixtures.gen_corpus(12, seed=2)[0]), run_id="pinned")
 
 
 def test_default_run_id_differs_per_input(spark, tmp_path):
