@@ -20,7 +20,6 @@ operators/   explode/route, (salted) reassembly, span equality,
 sources/     parquet table loaders + the snapshot/manifest table
              store (local Iceberg stand-in)
 plans/       the end-to-end extraction plan builder + resumable runner
-streaming/   Structured Streaming surface over the events table
 """
 
 __version__ = "0.1.0"

@@ -1,5 +1,6 @@
 """Training-data pipeline operators (dedup, similarity, textstats,
-media). See SURVEY.md §2 K1-K16."""
+media features, packing, decontam, curate). See SURVEY.md §2 K1-K21;
+K14-K16 are retired."""
 
 from __future__ import annotations
 

@@ -1,22 +1,12 @@
-"""Multimodal column operators: images/PDF rasters as opaque binary +
-typed metadata, with decode / feature-extract / resize / frame-sample
-as Arrow-batched stages (SURVEY.md H3).
+"""Media feature extraction (SURVEY.md H3): the fixture raster format
+(header-described uint8 pages, FIXTURES.md §1.2) decoded with numpy and
+summarised per media row — ink ratio, mean intensity, inked rows on
+page 0 — in one mapInArrow stage.
 
-The raster format here (header-described uint8 pages, FIXTURES.md §1.2)
-is genuinely decoded with numpy — decode, ink features, and thumbnail
-resize are real, tested implementations. Audio is genuinely decoded
-too for RIFF/WAVE PCM (a pure header parse + numpy frombuffer — no
-codec library needed). Compressed modalities (JPEG/PNG, MP3/AAC,
-video containers) have no libraries in this sandbox, so those decode
-paths are a clearly-marked NotImplementedError boundary behind the
-same Arrow plumbing: schema, batching, and partition behavior are real
-and tested either way.
-
-Scale notes: media work is one mapInArrow stage = one Arrow crossing
-per batch; batches are row-capped (session config
-arrow.maxRecordsPerBatch) so multi-MB binary payloads can't blow the
-Python-worker heap. Feature rows are narrow (the binary column is
-dropped before any shuffle).
+Scale notes: the stage is one Arrow crossing per batch; batches are
+row-capped (session config arrow.maxRecordsPerBatch) so multi-MB binary
+payloads can't blow the Python-worker heap. Feature rows are narrow
+(the binary column is dropped before any shuffle).
 """
 
 from __future__ import annotations
@@ -24,7 +14,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
@@ -48,26 +37,6 @@ _FEATURES_PA = pa.schema(
     ]
 )
 
-THUMBNAIL_SCHEMA = "media_ref string, thumb_w int, thumb_h int, thumbnail binary"
-_THUMBNAIL_PA = pa.schema(
-    [
-        ("media_ref", pa.string()),
-        ("thumb_w", pa.int32()),
-        ("thumb_h", pa.int32()),
-        ("thumbnail", pa.binary()),
-    ]
-)
-
-FRAME_SAMPLE_SCHEMA = "media_ref string, page_idx int, width int, height int, frame binary"
-_FRAME_PA = pa.schema(
-    [
-        ("media_ref", pa.string()),
-        ("page_idx", pa.int32()),
-        ("width", pa.int32()),
-        ("height", pa.int32()),
-        ("frame", pa.binary()),
-    ]
-)
 
 
 def _decode(bitmap: bytes, width: int, height: int, n_pages: int) -> np.ndarray:
@@ -101,155 +70,3 @@ def media_features(media_store: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_pydict(rows, schema=_FEATURES_PA)
 
     return media_store.mapInArrow(fn, MEDIA_FEATURES_SCHEMA)
-
-
-def thumbnails(media_store: DataFrame, size: int = 8) -> DataFrame:
-    """Block-mean downsample of page 0 to size×size uint8 (real resize)."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            refs, thumbs = [], []
-            for ref, w, h, p, bm in zip(
-                d["media_ref"], d["width"], d["height"], d["n_pages"], d["bitmap"]
-            ):
-                page = _decode(bm, w, h, p)[0].astype(np.float64)
-                ys = np.linspace(0, h, size + 1).astype(int)
-                xs = np.linspace(0, w, size + 1).astype(int)
-                t = np.empty((size, size), dtype=np.uint8)
-                for i in range(size):
-                    for j in range(size):
-                        cell = page[ys[i]:max(ys[i + 1], ys[i] + 1),
-                                    xs[j]:max(xs[j + 1], xs[j] + 1)]
-                        t[i, j] = int(round(cell.mean()))
-                refs.append(ref)
-                thumbs.append(t.tobytes())
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_ref": refs,
-                    "thumb_w": [size] * len(refs),
-                    "thumb_h": [size] * len(refs),
-                    "thumbnail": thumbs,
-                },
-                schema=_THUMBNAIL_PA,
-            )
-
-    return media_store.mapInArrow(fn, THUMBNAIL_SCHEMA)
-
-
-def frame_sample(media_store: DataFrame, stride: int = 2) -> DataFrame:
-    """Sample every `stride`-th page (video-frame-sampling shape, real
-    for our multi-page rasters): 1→N rows with the frame bytes."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            out = {k: [] for k in ("media_ref", "page_idx", "width", "height", "frame")}
-            for ref, w, h, p, bm in zip(
-                d["media_ref"], d["width"], d["height"], d["n_pages"], d["bitmap"]
-            ):
-                pages = _decode(bm, w, h, p)
-                for idx in range(0, p, stride):
-                    out["media_ref"].append(ref)
-                    out["page_idx"].append(idx)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["frame"].append(pages[idx].tobytes())
-            yield pa.RecordBatch.from_pydict(out, schema=_FRAME_PA)
-
-    return media_store.mapInArrow(fn, FRAME_SAMPLE_SCHEMA)
-
-
-# ------------------------------------------------------------------ audio
-
-AUDIO_FEATURES_SCHEMA = "media_ref string, sample_rate int, n_samples long, rms double"
-_AUDIO_PA = pa.schema(
-    [
-        ("media_ref", pa.string()),
-        ("sample_rate", pa.int32()),
-        ("n_samples", pa.int64()),
-        ("rms", pa.float64()),
-    ]
-)
-
-
-def encode_wav_pcm16(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Serialize mono int16 samples as a canonical RIFF/WAVE PCM file
-    (the inverse of decode_audio; used by fixtures and tests)."""
-    data = np.asarray(samples, dtype="<i2").tobytes()
-    n = len(data)
-
-    def u32(x: int) -> bytes:
-        return int(x).to_bytes(4, "little")
-
-    def u16(x: int) -> bytes:
-        return int(x).to_bytes(2, "little")
-
-    fmt = (
-        b"fmt " + u32(16) + u16(1) + u16(1) + u32(sample_rate)
-        + u32(sample_rate * 2) + u16(2) + u16(16)
-    )
-    return b"RIFF" + u32(4 + len(fmt) + 8 + n) + b"WAVE" + fmt + b"data" + u32(n) + data
-
-
-def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """REAL decode for RIFF/WAVE PCM (8/16/32-bit int, any channel
-    count — returned channel-interleaved): a pure header parse + numpy
-    frombuffer, no codec library needed. Compressed formats (MP3/AAC/
-    Opus) genuinely require external codecs, which this sandbox lacks
-    (SURVEY.md §0.2) — those raise NotImplementedError with the format
-    tag; on a real deployment route them through soundfile/ffmpeg. The
-    Arrow plumbing around this function is identical either way.
-
-    Returns (samples: np.ndarray, sample_rate: int)."""
-    if len(payload) < 44 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise NotImplementedError(
-            "not a RIFF/WAVE payload; compressed codecs unavailable in sandbox"
-        )
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("malformed WAV: missing fmt/data chunk")
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if audio_format != 1:  # 1 = PCM; 3 = float, 0x55 = mp3, ...
-        raise NotImplementedError(
-            f"WAV format tag {audio_format} needs an external codec (PCM only here)"
-        )
-    dtype = {8: np.uint8, 16: np.dtype("<i2"), 32: np.dtype("<i4")}.get(bits)
-    if dtype is None:
-        raise ValueError(f"unsupported PCM bit depth {bits}")
-    sample_rate = int.from_bytes(fmt[4:8], "little")
-    return np.frombuffer(data, dtype=dtype), sample_rate
-
-
-def audio_features(media_store: DataFrame, payload_col: str = "bitmap") -> DataFrame:
-    """Audio feature extraction (K16): real RIFF/PCM decode + RMS over
-    one Arrow stage, same batching/partition behavior as the image
-    stages."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            out = {k: [] for k in ("media_ref", "sample_rate", "n_samples", "rms")}
-            for ref, payload in zip(d["media_ref"], d[payload_col]):
-                samples, rate = decode_audio(payload)
-                out["media_ref"].append(ref)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(int(samples.size))
-                out["rms"].append(
-                    float(np.sqrt((samples.astype(np.float64) ** 2).mean()))
-                    if samples.size
-                    else 0.0
-                )
-            yield pa.RecordBatch.from_pydict(out, schema=_AUDIO_PA)
-
-    return media_store.mapInArrow(fn, AUDIO_FEATURES_SCHEMA)

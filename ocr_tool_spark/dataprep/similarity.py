@@ -323,7 +323,14 @@ def ivf_prune(
       7 days) never touches it.
 
     The newest complete build is never deleted regardless of TTL, so
-    readers resolving params always find their build. Deletes go
+    readers resolving params always find their build. The TTL does NOT
+    protect a long-lived reader: a DataFrame already resolved against
+    a superseded build (one rebuilt under other params) older than
+    `ttl_ns` has its parquet deleted underneath it and fails with
+    FileNotFoundException on its next action. So run prune only when
+    no reader holds frames on superseded builds older than `ttl_ns`;
+    otherwise keep `keep_latest` >= the number of param sets in
+    concurrent use. Deletes go
     through the Hadoop FileSystem of `path` — whatever FS Spark
     actually writes (HDFS/S3A/local), same discipline as the params
     read. Returns the pruned tokens."""

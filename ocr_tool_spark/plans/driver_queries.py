@@ -15,11 +15,13 @@ REGISTRATION BUDGET (VERDICT r1 next-step #1): the driver evaluates the
 FIRST 50 registered keys, so this file registers exactly 50 inside that
 window — basics are merged where they share a table and a plan shape
 (e.g. rownum+frame+ntile over ONE window spec; semi+anti as one tagged
-union) so every LLM-data-pipeline operator (K1-K16) and the extraction
+union) so the K1-K13 LLM-data-pipeline operators and the extraction
 flagship carry driver CORRECTNESS rows. Merges keep full operator
 coverage: each merged query's docstring names the §2 components it
-evidences. q_snapshot_time_travel stays registered past the window
-(pytest-covered; the resume suite is its real gate).
+evidences. The curation keys (q_dedup_components, q_pack_shards,
+q_stratified_sample, q_decontam, q_curate) are registered past the
+window, in that order; tests/test_driver_queries.py runs their oracles
+locally and pins the window and the order.
 
 Three oracle families:
 - plain ANSI SQL over the shared parquet views (most keys);
@@ -37,8 +39,9 @@ both engines, so projections stay unrounded; aggregation order is not
 deterministic, so aggregated doubles are rounded coarsely
 (CAST(ROUND(SUM(x)) AS BIGINT) for money sums) or avoided in favour of
 exact integer aggregates. Generated-oracle doubles are emitted as
-`<repr>e0` so DuckDB parses them as DOUBLE (a bare decimal literal
-becomes DECIMAL and loses round-trip exactness). Every computed column
+`CAST('<repr>' AS DOUBLE)` (_sql_double): a bare decimal literal
+becomes DECIMAL and loses round-trip exactness, and a `<repr>e0`
+suffix breaks when repr is already scientific. Every computed column
 is aliased identically on both sides; ambiguous orderings always carry
 a unique tie-breaker.
 """
@@ -1406,173 +1409,6 @@ def q_fingerprint(spark, sf):
 # ---------------------------------- past the 50-key driver window --------
 
 
-def _audio_waves():
-    """(media_ref, sample_rate, wave16) source-of-truth triples the
-    corpus is ENCODED from — kept separate so the oracle can compute
-    expectations from the raw samples without touching decode_audio."""
-    import numpy as np
-
-    rng = np.random.default_rng(31)
-    waves = []
-    for i, rate in enumerate((8000, 16000, 22050, 44100)):
-        t = np.arange(rate // 4)
-        wave16 = (
-            9000 * np.sin(2 * np.pi * 330 * (i + 1) * t / rate)
-            + rng.normal(scale=400, size=t.size)
-        ).astype(np.int16)
-        waves.append((f"wav:{i:05d}", rate, wave16))
-    return waves
-
-
-def _audio_corpus():
-    from ocr_tool_spark.dataprep.media import encode_wav_pcm16
-
-    return [
-        {
-            "media_ref": ref, "media_kind": "audio",
-            "width": 0, "height": 0, "n_pages": 0,
-            "bitmap": encode_wav_pcm16(wave16, rate),
-        }
-        for ref, rate, wave16 in _audio_waves()
-    ]
-
-
-@functools.lru_cache(maxsize=1)
-def _audio_oracle_sql() -> str:
-    """Generated VALUES oracle for K16, computed from the raw
-    synthesized wave16 arrays (NOT by round-tripping through the
-    production decode_audio — that made the decode step's check
-    circular, ADVICE r2): the engine must encode→decode back to these
-    exact samples for the hash to match."""
-    import numpy as np
-
-    rows = []
-    for ref, rate, wave16 in _audio_waves():
-        rms = float(np.sqrt((wave16.astype(np.float64) ** 2).mean()))
-        rows.append(f"('{ref}',{rate},{wave16.size},{_sql_double(rms)})")
-    return (
-        "SELECT media_ref, CAST(sample_rate AS BIGINT) AS sample_rate, "
-        "CAST(n_samples AS BIGINT) AS n_samples, rms "
-        f"FROM (VALUES {','.join(rows)}) AS t(media_ref, sample_rate, n_samples, rms)"
-    )
-
-
-@q("q_audio_features", _audio_oracle_sql)  # registered past the driver's
-def q_audio_features(spark, sf):  # 50-key window; locally oracle-gated
-    """K16 audio features: real RIFF/PCM WAV decode + RMS in one Arrow
-    stage, checked against a direct numpy replay. Sits past the
-    50-key driver window (the in-window slots are spent on the
-    higher-traffic operators); tests/test_driver_queries.py runs the
-    identical hash comparison locally."""
-    from ocr_tool_spark.dataprep.media import audio_features
-    from ocr_tool_spark.sources.tables import media_df
-
-    return audio_features(media_df(spark, _audio_corpus())).select(
-        "media_ref",
-        F.col("sample_rate").cast("long").alias("sample_rate"),
-        "n_samples",
-        "rms",
-    )
-
-
-@functools.lru_cache(maxsize=1)
-def _thumbnails_oracle_sql() -> str:
-    """Generated VALUES oracle for K14: the block-mean downsample
-    replayed by a direct numpy loop (no Spark, no mapInArrow) over the
-    same fixture payloads; thumbnail bytes are md5-hashed to keep the
-    SQL compact."""
-    import numpy as np
-
-    size = 8
-    _, media = _fixture_corpus_80()
-    rows = []
-    for m in media:
-        page = (
-            np.frombuffer(m["bitmap"], dtype=np.uint8)
-            .reshape(m["n_pages"], m["height"], m["width"])[0]
-            .astype(np.float64)
-        )
-        ys = np.linspace(0, m["height"], size + 1).astype(int)
-        xs = np.linspace(0, m["width"], size + 1).astype(int)
-        t = np.empty((size, size), dtype=np.uint8)
-        for i in range(size):
-            for j in range(size):
-                cell = page[
-                    ys[i] : max(ys[i + 1], ys[i] + 1),
-                    xs[j] : max(xs[j + 1], xs[j] + 1),
-                ]
-                t[i, j] = int(round(cell.mean()))
-        h = hashlib.md5(t.tobytes()).hexdigest()
-        rows.append(f"('{m['media_ref']}',{size},{size},'{h}')")
-    return (
-        "SELECT media_ref, CAST(thumb_w AS BIGINT) AS thumb_w, "
-        "CAST(thumb_h AS BIGINT) AS thumb_h, thumb_md5 "
-        f"FROM (VALUES {','.join(rows)}) AS t(media_ref, thumb_w, thumb_h, thumb_md5)"
-    )
-
-
-@q("q_thumbnails", _thumbnails_oracle_sql)  # past the driver's 50-key
-def q_thumbnails(spark, sf):  # window; locally oracle-gated
-    """K14 thumbnail resize (mapInArrow block-mean downsample),
-    hash-checked against an independent numpy replay. Registered past
-    the 50-key driver window (VERDICT r2 next #5);
-    tests/test_driver_queries.py runs the identical comparison."""
-    from ocr_tool_spark.dataprep.media import thumbnails
-    from ocr_tool_spark.sources.tables import media_df
-
-    _, media = _fixture_corpus_80()
-    return thumbnails(media_df(spark, media), size=8).select(
-        "media_ref",
-        F.col("thumb_w").cast("long").alias("thumb_w"),
-        F.col("thumb_h").cast("long").alias("thumb_h"),
-        F.md5("thumbnail").alias("thumb_md5"),
-    )
-
-
-@functools.lru_cache(maxsize=1)
-def _frame_sample_oracle_sql() -> str:
-    """Generated VALUES oracle for K15: every stride=2-th page of each
-    fixture raster, frame bytes md5-hashed — a direct numpy replay of
-    the 1→N frame-sampling stage."""
-    import numpy as np
-
-    stride = 2
-    _, media = _fixture_corpus_80()
-    rows = []
-    for m in media:
-        pages = np.frombuffer(m["bitmap"], dtype=np.uint8).reshape(
-            m["n_pages"], m["height"], m["width"]
-        )
-        for idx in range(0, m["n_pages"], stride):
-            h = hashlib.md5(pages[idx].tobytes()).hexdigest()
-            rows.append(
-                f"('{m['media_ref']}',{idx},{m['width']},{m['height']},'{h}')"
-            )
-    return (
-        "SELECT media_ref, CAST(page_idx AS BIGINT) AS page_idx, "
-        "CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height, frame_md5 "
-        f"FROM (VALUES {','.join(rows)}) AS t(media_ref, page_idx, width, height, frame_md5)"
-    )
-
-
-@q("q_frame_sample", _frame_sample_oracle_sql)  # past the driver's
-def q_frame_sample(spark, sf):  # 50-key window; locally oracle-gated
-    """K15 frame sampling (mapInArrow 1→N page explode), hash-checked
-    against an independent numpy replay. Registered past the 50-key
-    driver window (VERDICT r2 next #5)."""
-    from ocr_tool_spark.dataprep.media import frame_sample
-    from ocr_tool_spark.sources.tables import media_df
-
-    _, media = _fixture_corpus_80()
-    return frame_sample(media_df(spark, media), stride=2).select(
-        "media_ref",
-        F.col("page_idx").cast("long").alias("page_idx"),
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.md5("frame").alias("frame_md5"),
-    )
-
-
 @functools.lru_cache(maxsize=2)
 def _components_oracle_sql_for(sf_dir: str) -> str:
     spec = _refspec_dataprep()
@@ -1618,26 +1454,6 @@ def q_dedup_components(spark, sf):  # 50-key window; locally oracle-gated
         *getattr(pairs, "_ocr_persisted", []),
     ]
     return out
-
-
-@q("q_snapshot_time_travel")  # rows-only, registered PAST the driver's
-def q_snapshot_time_travel(spark, sf):  # 50-key window (pytest-gated)
-    """A1/A2 snapshot-read of the local Iceberg-emulating adapter: two
-    committed appends; returns the table AS OF snapshot 0. Idempotent
-    across invocations (batch-id keyed appends). The resume test suite
-    (tests/test_runner_resume.py) is the binding gate for this surface;
-    the registration slot inside the driver window is spent on the
-    LLM-pipeline operators instead."""
-    from ocr_tool_spark.storage.adapter import SnapshotTable
-
-    t = SnapshotTable("/tmp/ocr_q_snapshot_demo")
-    t.append(
-        spark.range(5).selectExpr("id AS k", "id * 2 AS v"), batch_id="b1"
-    )
-    t.append(
-        spark.range(3).selectExpr("id + 100 AS k", "id AS v"), batch_id="b2"
-    )
-    return t.read(spark, snapshot_id=0).orderBy("k")
 
 
 @q(

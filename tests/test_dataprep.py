@@ -129,85 +129,6 @@ def test_media_features_vs_numpy(spark):
         assert r.nonblank_rows == int((pages[0] > 0).any(axis=1).sum())
 
 
-def test_thumbnails_shape_and_determinism(spark):
-    from ocr_tool_spark import fixtures
-    from ocr_tool_spark.sources.tables import media_df
-
-    _, media_rows = fixtures.gen_corpus(10, seed=5)
-    store = media_df(spark, media_rows)
-    t1 = {r.media_ref: r.thumbnail for r in media.thumbnails(store, size=8).collect()}
-    t2 = {r.media_ref: r.thumbnail for r in media.thumbnails(store, size=8).collect()}
-    assert t1 == t2
-    assert all(len(v) == 64 for v in t1.values())
-
-
-def test_frame_sample_strides_pages(spark):
-    from ocr_tool_spark import fixtures
-    from ocr_tool_spark.sources.tables import media_df
-
-    _, media_rows = fixtures.gen_corpus(80, seed=42)
-    multi = [m for m in media_rows if m["n_pages"] >= 3]
-    assert multi, "fixture corpus should contain multi-page pdfs"
-    store = media_df(spark, multi)
-    out = media.frame_sample(store, stride=2).collect()
-    by_ref = {}
-    for r in out:
-        by_ref.setdefault(r.media_ref, []).append(r.page_idx)
-    for m in multi:
-        assert sorted(by_ref[m["media_ref"]]) == list(range(0, m["n_pages"], 2))
-        w, h = m["width"], m["height"]
-        frame = next(r.frame for r in out if r.media_ref == m["media_ref"])
-        assert len(frame) == w * h
-
-
-def test_audio_wav_roundtrip_and_features(spark):
-    """K16 audio decode is REAL for RIFF/PCM: encode→decode round-trips
-    bit-exactly, and the Spark audio_features stage matches a direct
-    numpy computation on deterministic synthesized waveforms."""
-    from ocr_tool_spark.sources.tables import media_df
-
-    rng = np.random.default_rng(9)
-    rows, expected = [], {}
-    for i, rate in enumerate((8000, 16000, 44100)):
-        t = np.arange(rate // 2)  # half a second
-        wave16 = (
-            10000 * np.sin(2 * np.pi * 440 * (i + 1) * t / rate)
-            + rng.normal(scale=500, size=t.size)
-        ).astype(np.int16)
-        payload = media.encode_wav_pcm16(wave16, rate)
-        got, got_rate = media.decode_audio(payload)
-        assert got_rate == rate
-        np.testing.assert_array_equal(got, wave16)
-        rows.append({
-            "media_ref": f"wav:{i}", "media_kind": "audio",
-            "width": 0, "height": 0, "n_pages": 0, "bitmap": payload,
-        })
-        expected[f"wav:{i}"] = (
-            rate, wave16.size,
-            float(np.sqrt((wave16.astype(np.float64) ** 2).mean())),
-        )
-    out = {r.media_ref: r for r in
-           media.audio_features(media_df(spark, rows)).collect()}
-    for ref, (rate, n, rms) in expected.items():
-        r = out[ref]
-        assert (r.sample_rate, r.n_samples) == (rate, n)
-        assert abs(r.rms - rms) < 1e-9
-
-
-def test_audio_compressed_formats_still_raise(spark):
-    """Non-PCM payloads (compressed codecs) keep the declared
-    NotImplementedError boundary — the sandbox has no codec library."""
-    with pytest.raises(NotImplementedError):
-        media.decode_audio(b"\x00\x01")  # not RIFF at all
-    import struct
-    # a RIFF/WAVE container whose format tag is MP3 (0x55), not PCM
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 0x55, 1, 16000, 32000, 2, 16)
-    payload = b"RIFF" + struct.pack("<I", 4 + len(fmt)) + b"WAVE" + fmt \
-        + b"data" + struct.pack("<I", 0)
-    with pytest.raises(NotImplementedError, match="external codec"):
-        media.decode_audio(payload)
-
-
 def test_fingerprint_stability_under_whitespace(spark):
     from ocr_tool_spark.dataprep import textstats
 

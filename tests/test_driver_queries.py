@@ -63,3 +63,30 @@ def test_rows_only_queries_run(spark, sf_dir_mid, name):
     df = QUERIES[name](spark, sf_dir_mid)
     assert df.count() >= 0
     assert df.schema is not None
+
+
+# the driver evaluates the FIRST 50 registered keys; this is the key
+# list of CORRECTNESS_r05.json, in registration order
+DRIVER_WINDOW = [
+    "q_scan", "q_filter", "q_explode", "q_array_hof", "q_distinct",
+    "q_join_broadcast", "q_join_sm", "q_semijoin", "q_range_join", "q_asof",
+    "q_agg_groupby", "q_count_distinct", "q_percentile", "q_rollup",
+    "q_pandas_udaf", "q_window_rownum", "q_window_lag", "q_topk_group",
+    "q_sort", "q_setops", "q_entity_decode", "q_regex", "q_string", "q_math",
+    "q_tumbling", "q_sliding", "q_session_window", "q_extract_main",
+    "q_extract_interleaved", "q_media_features", "q_pipeline_lineage",
+    "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_grouped_map", "q_udtf_split",
+    "q_dedup_exact", "q_dedup_ngram", "q_dedup_minhash", "q_dedup_simhash",
+    "q_embed_neardup", "q_knn_cosine", "q_knn_lsh", "q_knn_ivf",
+    "q_knn_ivf_recall", "q_knn_batch", "q_text_quality", "q_token_count",
+    "q_lang_id", "q_fingerprint",
+]
+
+
+def test_registration_order_pins_the_driver_window():
+    keys = list(QUERIES)
+    assert keys[:50] == DRIVER_WINDOW
+    assert keys[50:] == [
+        "q_dedup_components", "q_pack_shards", "q_stratified_sample",
+        "q_decontam", "q_curate",
+    ]

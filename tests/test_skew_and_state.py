@@ -1,10 +1,8 @@
-"""Salted-join equivalence (SURVEY.md C3) and stateful streaming (L7)."""
+"""Salted-join equivalence (SURVEY.md C3)."""
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import functions as F
 
 from ocr_tool_spark.operators.skew import salted_join
 
@@ -53,89 +51,6 @@ def test_salted_join_left_outer(spark, sf_dir):
         key=str,
     )
     assert salted == plain
-
-
-def test_stateful_running_totals(spark, sf_dir, tmp_path):
-    from ocr_tool_spark.streaming import incremental as st
-
-    src = str(tmp_path / "ev")
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    events.repartition(3).write.mode("overwrite").parquet(src)
-
-    stream = st.read_events_stream(spark, src)
-    q = (
-        st.running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("t_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: (r.n_events, round(r.total_value, 6))
-        for r in spark.table("t_state").collect()
-    }
-    exp = {
-        r.user_id: (r.n, round(r.total, 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    # update-mode memory sink keeps the latest row per key from the
-    # final micro-batch; with availableNow all input is one batch set,
-    # so final state must equal the batch aggregate
-    for uid, (n, tot) in exp.items():
-        assert got[uid][0] == n
-        assert abs(got[uid][1] - tot) < 1e-6
-
-
-def test_stateful_running_totals_transform_with_state(spark, sf_dir, tmp_path):
-    """L7's Spark-4 surface (transformWithStateInPandas +
-    StatefulProcessor/ValueState) must produce the same final state as
-    the batch aggregate — same contract as the applyInPandasWithState
-    path above. The TWS wire protocol needs protobuf (not installable
-    in this sandbox): the plan must BUILD regardless; execution is
-    skipped where google.protobuf is absent."""
-    import pytest
-
-    from ocr_tool_spark.streaming import incremental as st
-
-    src = str(tmp_path / "ev_tws")
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    events.repartition(3).write.mode("overwrite").parquet(src)
-
-    stream = st.read_events_stream(spark, src)
-    tws = st.running_user_totals_tws(stream)  # plan must always build
-    assert [f.name for f in tws.schema.fields] == [
-        "user_id", "n_events", "total_value",
-    ]
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState wire protocol needs protobuf (not in sandbox)",
-    )
-    q = (
-        tws
-        .writeStream.format("memory")
-        .queryName("t_state_tws")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: (r.n_events, round(r.total_value, 6))
-        for r in spark.table("t_state_tws").collect()
-    }
-    exp = {
-        r.user_id: (r.n, round(r.total, 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    for uid, (n, tot) in exp.items():
-        assert got[uid][0] == n
-        assert abs(got[uid][1] - tot) < 1e-6
 
 
 def test_salted_join_rejects_build_preserving_how(spark, sf_dir):
