@@ -24,18 +24,12 @@ BLOCK_TAGS = frozenset(
     "nav header footer aside".split()
 )
 
-#: Inline elements counted into a block's n_tags (tag-density signal).
-INLINE_TAGS = frozenset("span a b i em strong img br".split())
-
 #: Elements whose entire subtree is boilerplate: any block opened while
 #: one of these is an open ancestor is marked in_boiler and dropped.
 BOILER_TAGS = frozenset("nav header footer aside".split())
 
 #: Elements whose raw content is skipped entirely at tokenize time.
 RAW_SKIP_TAGS = frozenset("script style".split())
-
-#: Void elements: no close tag expected.
-VOID_TAGS = frozenset("br img".split())
 
 #: Named HTML entities decoded by the tokenizer (plus &#NN; / &#xHH;).
 NAMED_ENTITIES = {
@@ -108,7 +102,6 @@ OCR_ALPHABET = "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 .,-"
 # Span / table shapes (BASELINE.json:15)
 # --------------------------------------------------------------------------
 
-SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 KIND_TEXT = "text"
 KIND_MEDIA = "media"
 MEDIA_KIND_IMAGE = "image"

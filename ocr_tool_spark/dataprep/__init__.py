@@ -4,7 +4,54 @@ K14-K16 are retired."""
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def arrow_doc_stage(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    out_ddl: str,
+    kernel: Callable[[pa.Array], list[pa.Array]],
+) -> DataFrame:
+    """One vectorized mapInArrow pass over (id_col, text_col): per batch,
+    `kernel(text)` returns the `out_ddl` columns, and the stage emits
+    (id_col, *those columns) with the id keeping its input type. Empty
+    batches never reach the kernel; their column types come from the
+    declared schema (mapInArrow requires exact Arrow types)."""
+    ddl = f"{id_col} {docs.schema[id_col].dataType.simpleString()}, {out_ddl}"
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def fn(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                cols = [pa.array([], type=f.type) for f in schema]
+            else:
+                cols = [batch.column(id_col), *kernel(batch.column(text_col))]
+            yield pa.RecordBatch.from_arrays(cols, schema=schema)
+
+    return docs.select(id_col, text_col).mapInArrow(fn, ddl)
+
+
+def keep_intermediates(
+    out: DataFrame, *handles: DataFrame, inherit: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """Record on `out` the persisted/checkpointed frames that
+    release_intermediates(out) frees: the handles recorded on each
+    `inherit` frame, in order, then `handles`. A new DataFrame object
+    (every .select()) starts with none, so an operator that derives its
+    result from another operator's output inherits that output's
+    handles here. Returns `out`."""
+    out._ocr_persisted = [  # noqa: SLF001
+        *(h for f in inherit for h in getattr(f, "_ocr_persisted", ())),
+        *handles,
+    ]
+    return out
 
 
 def release_intermediates(df: DataFrame) -> None:
@@ -12,8 +59,8 @@ def release_intermediates(df: DataFrame) -> None:
     for its multi-consumer subtrees (LSH candidates, shingle sets) AND
     free the RDD blocks behind localCheckpoint handles (the components
     loop's per-round label frames). Call AFTER materializing `df`; the
-    frames are recorded on the returned DataFrame as `_ocr_persisted`
-    by the operator that created them.
+    operator that created the frames recorded them on its result with
+    keep_intermediates.
 
     Why callers own this: the operators return LAZY frames, so the
     operator itself can never know when the caches stop being needed —

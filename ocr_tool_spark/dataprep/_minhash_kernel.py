@@ -1,5 +1,6 @@
-"""Vectorized numpy kernel shared by the MinHash signature stage and
-the exact-set verify stage (dedup.py).
+"""Vectorized numpy kernel shared by the MinHash and SimHash signature
+stages, the exact-set verify stage (dedup.py) and the decontamination
+gram counts (decontam.py).
 
 One batch in → doc-segmented 64-bit shingle hashes out, with zero
 per-token and zero per-doc Python on the hot path:
@@ -194,3 +195,15 @@ def batch_shingle_hashes(col: pa.Array, k: int):
         sh_flat[out_offs[di]] = (th * comb[: m_arr[di]]).sum()
     # empty docs keep the zero "empty shingle" slot as-is
     return mix64(sh_flat), out_offs, m_arr
+
+
+def first_per_doc(h: np.ndarray, doc_of: np.ndarray):
+    """Distinct-within-doc with no per-doc loop: (h_s, doc_s, first) —
+    the slots sorted by (doc, hash), and the mask of each (doc, hash)
+    pair's first occurrence. h_s[first] lists every doc's distinct
+    hashes ascending, docs in order."""
+    order = np.lexsort((h, doc_of))
+    h_s, doc_s = h[order], doc_of[order]
+    first = np.ones(order.size, dtype=bool)
+    first[1:] = (h_s[1:] != h_s[:-1]) | (doc_s[1:] != doc_s[:-1])
+    return h_s, doc_s, first

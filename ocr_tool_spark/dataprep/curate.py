@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_tool_spark.dataprep import keep_intermediates
 from ocr_tool_spark.dataprep.decontam import contamination
 from ocr_tool_spark.dataprep.dedup import dedup_keep_list, minhash_lsh_pairs
 from ocr_tool_spark.dataprep.packing import pack_shards
@@ -85,12 +86,11 @@ def curate_corpus(
     )
     clean = deduped.join(contaminated, id_col, "left_anti")
 
-    out = pack_shards(clean, budget=budget, text_col=text_col)
     # caller releases via dataprep.release_intermediates (LSH handles
     # plus the two exclusion frames)
-    out._ocr_persisted = [  # noqa: SLF001
-        *getattr(keep, "_ocr_persisted", []),
+    return keep_intermediates(
+        pack_shards(clean, budget=budget, text_col=text_col),
         dup_drops,
         contaminated,
-    ]
-    return out
+        inherit=(keep,),
+    )

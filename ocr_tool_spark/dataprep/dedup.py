@@ -1,8 +1,9 @@
 """Deduplication operators for training-data pipelines.
 
-Four families. Signatures come from vectorized Arrow kernels
-(mapInArrow over the shared _minhash_kernel: no per-row Python); the
-bucketing, pairing and verify joins are native Spark SQL expressions:
+Four families. Signatures come from vectorized Arrow kernels (one
+dataprep.arrow_doc_stage each, over the shared _minhash_kernel: no
+per-row Python); the bucketing, pairing and verify joins are native
+Spark SQL expressions:
 
 - exact:      hash-groupBy on normalized text (md5 — cross-engine
               comparable, so the DuckDB oracle can replay it)
@@ -21,7 +22,8 @@ bucketing, pairing and verify joins are native Spark SQL expressions:
               and for the SQL-checkable adjacent-pair query.
 
 MinHash, SimHash and the embedding near-dup path (similarity.py) share
-one bucket-pair policy, bucket_pairs. All hashes are deterministic
+one bucket-pair policy, bucket_pairs, and record the frames they
+persist with dataprep.keep_intermediates. All hashes are deterministic
 across runs and partitionings (J5).
 """
 
@@ -30,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ocr_tool_spark.dataprep import arrow_doc_stage, keep_intermediates
 from ocr_tool_spark.operators.parallelism import ensure_parallelism_floor
 
 # Mersenne prime 2^31-1: universal-hash modulus. Shingle hashes are
@@ -96,8 +99,6 @@ def minhash_signatures_arrow(
 
     from ocr_tool_spark.dataprep import _minhash_kernel as mk
 
-    id_type = dict(zip(docs.schema.names, docs.schema.fields))[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, sig array<bigint>"
     sel = docs.select(id_col, text_col)
     # Python-stage parallelism floor: an underfilled scan serializes
     # the signature stage. Repartition ONLY when the scan both
@@ -113,34 +114,26 @@ def minhash_signatures_arrow(
     a_vec = np.arange(1, 2 * num_hashes, 2, dtype=np.int64)[:, None]  # odd multipliers
     b_vec = ((0x9E3779B9 * np.arange(1, num_hashes + 1, dtype=np.int64)) & 0x7FFFFFFF)[:, None]
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            ndocs = batch.num_rows
-            if ndocs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array([], type=pa.list_(pa.int64()))],
-                    names=[id_col, "sig"],
-                )
-                continue
-            sh_mixed, out_offs, _ = mk.batch_shingle_hashes(batch.column(text_col), k)
-            x = (sh_mixed % np.uint64(_P)).astype(np.int64)
-            # (lanes × shingles) min-fold, segmented per doc with
-            # reduceat: duplicate shingles can't change a min, so the
-            # old per-doc np.unique is dropped — bit-identical output,
-            # no per-doc Python loop (VERDICT r3 next #3)
-            mins = np.minimum.reduceat(
-                (a_vec * x[None, :] + b_vec) % _P, out_offs[:-1], axis=1
-            )
-            sig = pa.ListArray.from_arrays(
+    def kernel(text):
+        sh_mixed, out_offs, _ = mk.batch_shingle_hashes(text, k)
+        x = (sh_mixed % np.uint64(_P)).astype(np.int64)
+        # (lanes × shingles) min-fold, segmented per doc with
+        # reduceat: duplicate shingles can't change a min, so the
+        # old per-doc np.unique is dropped — bit-identical output,
+        # no per-doc Python loop (VERDICT r3 next #3)
+        mins = np.minimum.reduceat(
+            (a_vec * x[None, :] + b_vec) % _P, out_offs[:-1], axis=1
+        )
+        return [
+            pa.ListArray.from_arrays(
                 pa.array(
-                    np.arange(0, (ndocs + 1) * num_hashes, num_hashes, dtype=np.int64)
+                    np.arange(0, (len(text) + 1) * num_hashes, num_hashes, dtype=np.int64)
                 ).cast(pa.int32()),
                 pa.array(np.ascontiguousarray(mins.T).ravel(), type=pa.int64()),
             )
-            yield pa.RecordBatch.from_arrays([ids, sig], names=[id_col, "sig"])
+        ]
 
-    return sel.mapInArrow(fn, out_schema)
+    return arrow_doc_stage(sel, id_col, text_col, "sig array<bigint>", kernel)
 
 
 def shingle_hash_sets(
@@ -164,47 +157,24 @@ def shingle_hash_sets(
 
     from ocr_tool_spark.dataprep import _minhash_kernel as mk
 
-    id_type = dict(zip(docs.schema.names, docs.schema.fields))[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, _sh array<bigint>"
-
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            ndocs = batch.num_rows
-            if ndocs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array([], type=pa.list_(pa.int64()))],
-                    names=[id_col, "_sh"],
-                )
-                continue
-            sh_mixed, out_offs, _ = mk.batch_shingle_hashes(batch.column(text_col), k)
-            # distinct-within-doc with NO per-doc Python loop (VERDICT
-            # r4 wrong #4): sort by (doc, hash), keep first occurrences
-            # — the same vectorized pattern the decontam kernel uses.
-            # Per-doc output stays sorted ascending, exactly like the
-            # np.unique-per-segment form it replaces.
-            doc_of = np.repeat(
-                np.arange(ndocs, dtype=np.int64), np.diff(out_offs)
-            )
-            order = np.lexsort((sh_mixed, doc_of))
-            sh_s = sh_mixed[order]
-            doc_s = doc_of[order]
-            first = np.empty(order.size, dtype=bool)
-            if order.size:
-                first[0] = True
-                first[1:] = (sh_s[1:] != sh_s[:-1]) | (doc_s[1:] != doc_s[:-1])
-            flat = sh_s[first]
-            new_offs = np.zeros(ndocs + 1, dtype=np.int64)
-            np.cumsum(
-                np.bincount(doc_s[first], minlength=ndocs), out=new_offs[1:]
-            )
-            sig = pa.ListArray.from_arrays(
+    def kernel(text):
+        sh_mixed, out_offs, _ = mk.batch_shingle_hashes(text, k)
+        ndocs = len(text)
+        # distinct-within-doc with NO per-doc Python loop (VERDICT r4
+        # wrong #4); each doc's hashes come out sorted ascending, as
+        # the differential tests compare them with the sorted spec set
+        doc_of = np.repeat(np.arange(ndocs, dtype=np.int64), np.diff(out_offs))
+        sh_s, doc_s, first = mk.first_per_doc(sh_mixed, doc_of)
+        new_offs = np.zeros(ndocs + 1, dtype=np.int64)
+        np.cumsum(np.bincount(doc_s[first], minlength=ndocs), out=new_offs[1:])
+        return [
+            pa.ListArray.from_arrays(
                 pa.array(new_offs).cast(pa.int32()),
-                pa.array(flat.view(np.int64), type=pa.int64()),
+                pa.array(sh_s[first].view(np.int64), type=pa.int64()),
             )
-            yield pa.RecordBatch.from_arrays([ids, sig], names=[id_col, "_sh"])
+        ]
 
-    return docs.select(id_col, text_col).mapInArrow(fn, out_schema)
+    return arrow_doc_stage(docs, id_col, text_col, "_sh array<bigint>", kernel)
 
 
 def bucket_pairs(
@@ -240,7 +210,7 @@ def bucket_pairs(
     bucket ever materializes on one executor heap). `ann`, the
     annotated multi-member frame, feeds both join sides and the star
     branch, so it is persisted here (spill-safe MEMORY_AND_DISK); the
-    caller records it for release_intermediates.
+    caller records it with keep_intermediates.
     """
     from pyspark import StorageLevel
 
@@ -341,7 +311,8 @@ def minhash_lsh_pairs(
     identical absent a 2^-64 collision and the verify joins move long
     arrays, not wide string arrays (r4; VERDICT r3 next #3).
 
-    `_ocr_persisted[0]` is the persisted candidate-pair frame.
+    The first handle kept for release_intermediates
+    (`_ocr_persisted[0]`) is the persisted candidate-pair frame.
     """
     from pyspark import StorageLevel
 
@@ -386,8 +357,7 @@ def minhash_lsh_pairs(
     )
     # caller-owned cache handles: dataprep.release_intermediates(out)
     # unpersists them once the result is materialized (ADVICE r3)
-    out._ocr_persisted = [cand, sh, ann]  # noqa: SLF001
-    return out
+    return keep_intermediates(out, cand, sh, ann)
 
 
 # ------------------------------------------------------------- simhash
@@ -413,41 +383,28 @@ def simhash_signatures_arrow(
 
     from ocr_tool_spark.dataprep import _minhash_kernel as mk
 
-    id_type = dict(zip(docs.schema.names, docs.schema.fields))[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, sig bigint"
     sel = docs.select(id_col, text_col)
     par = docs.sparkSession.sparkContext.defaultParallelism
     sel = ensure_parallelism_floor(sel, par, min_bytes=32 << 20)
     U64 = np.uint64
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            ndocs = batch.num_rows
-            if ndocs == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array([], type=pa.int64())], names=[id_col, "sig"]
-                )
-                continue
-            got = mk.ascii_token_hashes(batch.column(text_col))
-            if got is None:
-                got = mk.fallback_token_hashes(batch.column(text_col))
-            th_all, m_arr = got
-            offs = np.zeros(ndocs + 1, dtype=np.int64)
-            np.cumsum(m_arr, out=offs[1:])
-            sig = np.zeros(ndocs, dtype=np.uint64)
-            c = np.empty(th_all.size + 1, dtype=np.int64)
-            for j in range(64):
-                c[0] = 0
-                np.cumsum(((th_all >> U64(j)) & U64(1)).astype(np.int64), out=c[1:])
-                ones = c[offs[1:]] - c[offs[:-1]]
-                sig |= (2 * ones > m_arr).astype(np.uint64) << U64(j)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sig.view(np.int64), type=pa.int64())],
-                names=[id_col, "sig"],
-            )
+    def kernel(text):
+        got = mk.ascii_token_hashes(text)
+        if got is None:
+            got = mk.fallback_token_hashes(text)
+        th_all, m_arr = got
+        offs = np.zeros(len(text) + 1, dtype=np.int64)
+        np.cumsum(m_arr, out=offs[1:])
+        sig = np.zeros(len(text), dtype=np.uint64)
+        c = np.empty(th_all.size + 1, dtype=np.int64)
+        for j in range(64):
+            c[0] = 0
+            np.cumsum(((th_all >> U64(j)) & U64(1)).astype(np.int64), out=c[1:])
+            ones = c[offs[1:]] - c[offs[:-1]]
+            sig |= (2 * ones > m_arr).astype(np.uint64) << U64(j)
+        return [pa.array(sig.view(np.int64), type=pa.int64())]
 
-    return sel.mapInArrow(fn, out_schema)
+    return arrow_doc_stage(sel, id_col, text_col, "sig bigint", kernel)
 
 
 def simhash_pairs(
@@ -486,9 +443,7 @@ def simhash_pairs(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    # caller-owned cache handle (see minhash_lsh_pairs / ADVICE r3)
-    out._ocr_persisted = [ann]  # noqa: SLF001
-    return out
+    return keep_intermediates(out, ann)
 
 
 # ------------------------------------------------------- n-gram jaccard
@@ -586,9 +541,7 @@ def pair_components(
         labels = new_labels.drop("_moved")
         if changed == 0:
             break
-    out = labels.select("doc_id", "component")
-    out._ocr_persisted = handles  # noqa: SLF001 — see release_intermediates
-    return out
+    return keep_intermediates(labels.select("doc_id", "component"), *handles)
 
 
 def dedup_keep_list(
@@ -609,12 +562,8 @@ def dedup_keep_list(
         )
         .withColumn("keep", (F.col(id_col) == F.col("canonical_id")).cast("int"))
     )
-    # propagate the PAIR frame's handles too (minhash_lsh_pairs persists
-    # its candidate/shingle frames): without this, every caller that
+    # inherit the PAIR frame's handles too (minhash_lsh_pairs persists
+    # its candidate/shingle frames): without them, every caller that
     # releases via the keep-list leaks two candidate-sized caches per
     # call in a long-lived session (ADVICE r4)
-    out._ocr_persisted = [  # noqa: SLF001
-        *getattr(comp, "_ocr_persisted", []),
-        *getattr(pairs, "_ocr_persisted", []),
-    ]
-    return out
+    return keep_intermediates(out, inherit=(comp, pairs))

@@ -16,27 +16,13 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 MEDIA_FEATURES_SCHEMA = (
     "media_ref string, media_kind string, width int, height int, n_pages int, "
     "n_bytes long, ink_ratio double, mean_intensity double, nonblank_rows int"
 )
-# explicit arrow types: mapInArrow requires the produced batches to
-# match the declared Spark schema exactly (int32 vs inferred int64)
-_FEATURES_PA = pa.schema(
-    [
-        ("media_ref", pa.string()),
-        ("media_kind", pa.string()),
-        ("width", pa.int32()),
-        ("height", pa.int32()),
-        ("n_pages", pa.int32()),
-        ("n_bytes", pa.int64()),
-        ("ink_ratio", pa.float64()),
-        ("mean_intensity", pa.float64()),
-        ("nonblank_rows", pa.int32()),
-    ]
-)
-
 
 
 def _decode(bitmap: bytes, width: int, height: int, n_pages: int) -> np.ndarray:
@@ -46,13 +32,14 @@ def _decode(bitmap: bytes, width: int, height: int, n_pages: int) -> np.ndarray:
 def media_features(media_store: DataFrame) -> DataFrame:
     """Per-media decode + feature extraction (real): ink ratio, mean
     intensity, count of rows containing ink on page 0."""
+    # explicit arrow types: mapInArrow requires the produced batches to
+    # match the declared Spark schema exactly (int32 vs inferred int64)
+    out_pa = to_arrow_schema(StructType.fromDDL(MEDIA_FEATURES_SCHEMA))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             d = batch.to_pydict()
-            rows = {k: [] for k in (
-                "media_ref", "media_kind", "width", "height", "n_pages",
-                "n_bytes", "ink_ratio", "mean_intensity", "nonblank_rows")}
+            rows = {k: [] for k in out_pa.names}
             for ref, kind, w, h, p, bm in zip(
                 d["media_ref"], d["media_kind"], d["width"], d["height"],
                 d["n_pages"], d["bitmap"],
@@ -67,6 +54,6 @@ def media_features(media_store: DataFrame) -> DataFrame:
                 rows["ink_ratio"].append(float((pages > 0).mean()))
                 rows["mean_intensity"].append(float(pages.mean()))
                 rows["nonblank_rows"].append(int((pages[0] > 0).any(axis=1).sum()))
-            yield pa.RecordBatch.from_pydict(rows, schema=_FEATURES_PA)
+            yield pa.RecordBatch.from_pydict(rows, schema=out_pa)
 
     return media_store.mapInArrow(fn, MEDIA_FEATURES_SCHEMA)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ocr_tool_spark.dataprep import keep_intermediates
 from ocr_tool_spark.dataprep.dedup import bucket_pairs
 
 
@@ -58,6 +59,25 @@ def cosine_with_norms(a: Column, na: Column, b: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
+def _topk_vs_query(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """(id, cos_sim) of the k `cand` rows nearest the single broadcast
+    query whose vector and norm each row carries as _qv/_qn: cosine
+    rounded to 6 places, ties broken by id."""
+    return (
+        cand.select(
+            id_col,
+            F.round(
+                cosine_with_norms(
+                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
+                ),
+                6,
+            ).alias("cos_sim"),
+        )
+        .orderBy(F.desc("cos_sim"), id_col)
+        .limit(k)
+    )
+
+
 def brute_topk(
     embeddings: DataFrame,
     query_vec_id: int,
@@ -73,20 +93,8 @@ def brute_topk(
             F.col(vec_col).alias("_qv"), norm(F.col(vec_col)).alias("_qn")
         )
     )
-    return (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .crossJoin(q)
-        .select(
-            id_col,
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
+    return _topk_vs_query(
+        embeddings.filter(F.col(id_col) != query_vec_id).crossJoin(q), k, id_col, vec_col
     )
 
 
@@ -193,21 +201,32 @@ def lsh_topk(
     for t in range(n_tables):
         m = F.col(f"_b{t}") == F.col(f"_qb{t}")
         match_any = m if match_any is None else (match_any | m)
-    return (
-        sig.filter(F.col(id_col) != query_vec_id)
-        .crossJoin(q)
-        .filter(match_any)
-        .select(
-            id_col,
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
+    return _topk_vs_query(
+        sig.filter(F.col(id_col) != query_vec_id).crossJoin(q).filter(match_any),
+        k, id_col, vec_col,
+    )
+
+
+def _published_builds(spark, path: str) -> list[dict]:
+    """Published IVF build rows at `path` (params rows naming a build
+    and its build_ts), newest first — read THROUGH SPARK, so it works
+    against whatever filesystem Spark writes. Empty when nothing is
+    published: the path is absent, or holds only a pre-r4 legacy
+    marker (which then gets rebuilt)."""
+    try:
+        rows = [
+            r.asDict()
+            for r in spark.read.option("recursiveFileLookup", "true")
+            .option("mergeSchema", "true")
+            .parquet(f"{path}/params")
+            .collect()
+        ]
+    except Exception:  # path absent on the warehouse FS: not built
+        return []
+    return sorted(
+        (r for r in rows if r.get("build") and r.get("build_ts") is not None),
+        key=lambda r: r["build_ts"],
+        reverse=True,
     )
 
 
@@ -247,24 +266,8 @@ def ivf_build(
 
     spark = embeddings.sparkSession
 
-    def _published():
-        """Newest complete published build row, or None."""
-        try:
-            rows = [
-                r.asDict()
-                for r in spark.read.option("recursiveFileLookup", "true")
-                .option("mergeSchema", "true")
-                .parquet(f"{path}/params")
-                .collect()
-            ]
-        except Exception:  # path absent on the warehouse FS: not built
-            return None
-        rows = [r for r in rows if r.get("build") and r.get("build_ts") is not None]
-        if not rows:  # empty or pre-r4 legacy marker: rebuild
-            return None
-        return max(rows, key=lambda r: r["build_ts"])
-
-    cur = _published()
+    builds = _published_builds(spark, path)
+    cur = builds[0] if builds else None
     if cur is None or (cur["n_centroids"], cur["seed"]) != (n_centroids, seed):
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
@@ -291,9 +294,9 @@ def ivf_build(
             [(int(n_centroids), int(seed), token, _time.time_ns())],
             "n_centroids int, seed int, build string, build_ts long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params/{token}")
-        cur = _published()
-        if cur is None:  # a racing overwrite clobbered mid-read: ours is complete
-            cur = {"build": token}
+        # newest published; if a racing overwrite clobbered the read,
+        # ours is complete
+        cur = (_published_builds(spark, path) or [{"build": token}])[0]
     base = f"{path}/builds/{cur['build']}"
     return (
         spark.read.parquet(f"{base}/assigned"),
@@ -342,22 +345,7 @@ def ivf_prune(
     fs = hpath(path).getFileSystem(sc._jsc.hadoopConfiguration())
     now = _time.time_ns()
 
-    try:
-        rows = [
-            r.asDict()
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true")
-            .parquet(f"{path}/params")
-            .collect()
-        ]
-    except Exception:  # no params published: nothing is referenced
-        rows = []
-    published = sorted(
-        (r for r in rows if r.get("build") and r.get("build_ts") is not None),
-        key=lambda r: r["build_ts"],
-        reverse=True,
-    )
-    keep = {r["build"] for r in published[: max(keep_latest, 1)]}
+    published = _published_builds(spark, path)
     pruned: list[str] = []
     for r in published[max(keep_latest, 1) :]:
         if now - r["build_ts"] >= ttl_ns:
@@ -366,7 +354,7 @@ def ivf_prune(
             pruned.append(r["build"])
     builds_dir = hpath(f"{path}/builds")
     if fs.exists(builds_dir):
-        referenced = keep | {r["build"] for r in published}
+        referenced = {r["build"] for r in published}
         for st in fs.listStatus(builds_dir):
             tok = st.getPath().getName()
             if (
@@ -563,8 +551,7 @@ def near_dup_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )
-    out._ocr_persisted = [ann]  # noqa: SLF001 — release_intermediates
-    return out
+    return keep_intermediates(out, ann)
 
 
 def topk_per_query(

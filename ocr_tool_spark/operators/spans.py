@@ -15,8 +15,6 @@ from pyspark.sql import functions as F
 
 from ocr_tool_spark.constants import KIND_MEDIA, KIND_TEXT
 
-SPAN_COLS = ("kind", "text", "media_ref", "offset")
-
 
 def explode_spans(docs: DataFrame) -> DataFrame:
     """doc table -> one row per span: (doc_id, kind, text, media_ref, offset)."""

@@ -1438,6 +1438,7 @@ def q_dedup_components(spark, sf):  # 50-key window; locally oracle-gated
     Engine: iterative min-label propagation (dedup.pair_components);
     oracle: path-compressed union-find in the plain-Python spec — two
     independent algorithms agreeing on the same input."""
+    from ocr_tool_spark.dataprep import keep_intermediates
     from ocr_tool_spark.dataprep.dedup import minhash_lsh_pairs, pair_components
 
     pairs = minhash_lsh_pairs(_planted_docs(spark, sf), threshold=0.6)
@@ -1446,14 +1447,9 @@ def q_dedup_components(spark, sf):  # 50-key window; locally oracle-gated
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
     )
-    # .select() returns a new Python object: re-attach the handle list
-    # (pairs' LSH caches + the loop's localCheckpoint frames) so
+    # the loop's localCheckpoint frames + pairs' LSH caches, so
     # release_intermediates(result) frees everything (VERDICT r4 #1)
-    out._ocr_persisted = [  # noqa: SLF001
-        *getattr(comp, "_ocr_persisted", []),
-        *getattr(pairs, "_ocr_persisted", []),
-    ]
-    return out
+    return keep_intermediates(out, inherit=(comp, pairs))
 
 
 @q(

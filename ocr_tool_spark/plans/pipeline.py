@@ -10,10 +10,11 @@
     -> unionByName -> (optionally salted) reassembly by (doc_id, offset)
 
 Scale shape: the text branch has exactly one shuffle (reassembly); the
-media branch adds the ref-dedup exchange + the results join. When the
-referenced-media side fits the broadcast threshold the results join is
-a broadcast hash join; at 10^12-doc scale it degrades gracefully to a
-shuffled join that AQE can skew-split. OCR-per-distinct-ref trades one
+media branch adds the ref-dedup exchange + the results join. The
+results join always broadcasts the OCR side (a broadcast hint, so the
+size threshold does not apply): one narrow row per distinct referenced
+media — text and timing, no bitmaps — which the runner bounds further
+to one partition batch. OCR-per-distinct-ref trades one
 extra exchange for never OCR-ing a shared scan twice — at mostly-unique
 media it costs ~nothing (the exchange carries refs, not bitmaps).
 
@@ -153,7 +154,6 @@ def ocr_referenced_media(
 def extract_spans(
     docs: DataFrame,
     media_store: DataFrame | None = None,
-    broadcast_media: bool = True,
     size_ocr_by_pages: bool = False,
 ) -> DataFrame:
     """Span-level extraction: one row per span with extracted text.
@@ -182,11 +182,9 @@ def extract_spans(
         ocr_res = ocr_referenced_media(
             media_spans, media_store, size_by_pages=size_ocr_by_pages
         )
-        if broadcast_media:
-            ocr_res = F.broadcast(ocr_res)
         media_out = (
             media_spans.select("doc_id", "media_ref", "offset")
-            .join(ocr_res, "media_ref", "left")
+            .join(F.broadcast(ocr_res), "media_ref", "left")
             .select(
                 "doc_id",
                 F.lit(KIND_MEDIA).alias("kind"),
@@ -203,9 +201,8 @@ def extract_documents(
     docs: DataFrame,
     media_store: DataFrame | None = None,
     salt: int | None = None,
-    broadcast_media: bool = True,
 ) -> DataFrame:
     """Full pipeline: interleaved doc table in, extracted doc table out
     (same (doc_id, spans) shape, spans ordered by offset)."""
-    spans = extract_spans(docs, media_store, broadcast_media=broadcast_media)
+    spans = extract_spans(docs, media_store)
     return reassemble(spans.drop("ocr_ms"), salt=salt)

@@ -251,21 +251,24 @@ class PipelineRunner:
             elapsed = max(time.perf_counter() - t0, 1e-9)
             total_docs = int(observed.get("docs") or sum(m.docs for m in metrics))
             committed_at = datetime.now(timezone.utc)
+            # one row per partition of the batch, spans or not: a
+            # partition without a lineage row stays pending, and every
+            # later run() would redo its batch
+            found = {m.partition_id: m for m in metrics}
             lineage_rows = [
                 (
                     run_id,
-                    int(m.partition_id),
-                    int(m.docs),
-                    int(m.spans),
-                    int(m.text_spans),
-                    int(m.media_spans),
-                    float(m.ocr_ms_p50) if m.ocr_ms_p50 is not None else None,
-                    float(m.ocr_ms_p95) if m.ocr_ms_p95 is not None else None,
+                    int(p),
+                    *(
+                        (m.docs, m.spans, m.text_spans, m.media_spans, m.ocr_ms_p50, m.ocr_ms_p95)
+                        if (m := found.get(p))
+                        else (0, 0, 0, 0, None, None)
+                    ),
                     round(total_docs / elapsed, 3),
                     int(snapshot_id),
                     committed_at,
                 )
-                for m in metrics
+                for p in batch
             ]
             ldf = self.spark.createDataFrame(lineage_table(lineage_rows))
             self.lineage.append(ldf, batch_id=batch_id)

@@ -12,11 +12,9 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 SPAN = StructType(
@@ -62,21 +60,5 @@ OCR_RESULT = StructType(
     [
         StructField("text", StringType()),
         StructField("ocr_ms", DoubleType()),
-    ]
-)
-
-LINEAGE = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", IntegerType()),
-        StructField("docs", LongType()),
-        StructField("spans", LongType()),
-        StructField("text_spans", LongType()),
-        StructField("media_spans", LongType()),
-        StructField("ocr_ms_p50", DoubleType()),
-        StructField("ocr_ms_p95", DoubleType()),
-        StructField("docs_per_sec", DoubleType()),
-        StructField("snapshot_id", LongType()),
-        StructField("committed_at", TimestampType()),
     ]
 )

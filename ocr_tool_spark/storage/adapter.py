@@ -9,15 +9,13 @@ its files are never referenced by any committed manifest.
 
 Append idempotence is keyed by caller-supplied ``batch_id``: appending
 a batch_id that is already in the current manifest is a no-op. That is
-exactly the contract Structured Streaming's foreachBatch needs (L8) and
-what makes the resume path (§3.3) exactly-once at partition-batch
-granularity.
+what makes the runner's resume path (§3.3) exactly-once at
+partition-batch granularity.
 
-On a real cluster the same call-sites switch to the Iceberg runtime
-(``spark.read.format("iceberg")`` / ``df.writeTo(tbl).append()``) via
-``IcebergTable`` below; configuration is documented in
-docs/cluster_profile.md and deliberately not executed here (no Iceberg
-jars in the sandbox, SURVEY.md §0.2).
+The package has no Iceberg adapter (the Iceberg runtime jars are not a
+dependency, SURVEY.md §0.2): the runner always writes a
+``SnapshotTable``. docs/cluster_profile.md describes the deployment it
+stands in for.
 """
 
 from __future__ import annotations
@@ -112,30 +110,3 @@ class SnapshotTable:
         os.replace(tmp, self._head)
         return new_id
 
-
-class IcebergTable:
-    """Cluster-profile adapter: same interface, real Iceberg catalog.
-
-    Requires the iceberg-spark-runtime jar + catalog conf (see
-    docs/cluster_profile.md); not importable-error-free to *use* in
-    this sandbox, but kept so the pipeline code is storage-agnostic.
-    """
-
-    def __init__(self, identifier: str):
-        self.identifier = identifier
-
-    def current_snapshot_id(self) -> int:
-        raise NotImplementedError("Iceberg runtime not available in sandbox")
-
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        r = spark.read.format("iceberg")
-        if snapshot_id is not None:
-            r = r.option("snapshot-id", str(snapshot_id))
-        return r.load(self.identifier)
-
-    def append(self, df: DataFrame, batch_id: str) -> int:
-        # Iceberg gives atomic append natively; idempotence at batch
-        # granularity comes from a WAP (write-audit-publish) branch or
-        # the caller's lineage anti-join — documented in the profile.
-        df.writeTo(self.identifier).append()
-        return -1

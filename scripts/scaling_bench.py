@@ -84,30 +84,18 @@ def ensure_corpus(n_docs: int) -> str:
 def _parallel_utilization(event_dir: str, cores: int, windows: list) -> list:
     """Noise-robust scaling evidence: for each measured run window, the
     fraction of available core-time actually spent in tasks
-    (sum task durations / (cores x wall)). Host slowdowns hit numerator
-    and denominator alike, so this isolates OUR plan's parallelism from
-    the shared machine's throughput swings."""
-    import glob as g
+    (sum task durations / (cores x wall)), from the task spans of
+    perfbench.eventlog. Host slowdowns hit numerator and denominator
+    alike, so this isolates OUR plan's parallelism from the shared
+    machine's throughput swings."""
+    from perfbench.eventlog import parse
 
-    utils = []
-    files = [p for p in g.glob(f"{event_dir}/*") if not p.endswith(".inprogress")]
-    if not files:
-        return utils
-    spans = []
-    for line in open(max(files, key=os.path.getmtime), errors="ignore"):
-        try:
-            e = json.loads(line)
-        except ValueError:
-            continue
-        if e.get("Event") == "SparkListenerTaskEnd":
-            ti = e["Task Info"]
-            spans.append((ti["Launch Time"], ti["Finish Time"]))
-    for w0, w1 in windows:
-        busy = sum(
-            min(f, w1) - max(l, w0) for l, f in spans if f > w0 and l < w1
-        )
-        utils.append(round(busy / (cores * (w1 - w0)), 3))
-    return utils
+    spans = [t for st in parse(event_dir).stages.values() for t in st.task_spans]
+    return [
+        round(sum(min(f, w1) - max(l, w0) for l, f in spans if f > w0 and l < w1)
+              / (cores * (w1 - w0)), 3)
+        for w0, w1 in windows
+    ]
 
 
 def worker(corpus: str, cores: int, salt: int, runs: int = 4) -> None:

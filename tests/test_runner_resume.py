@@ -75,6 +75,25 @@ def test_kill_resume_bit_identical(spark, tmp_path, corpus):
     assert media_parts and all(r.ocr_ms_p50 is not None for r in media_parts)
 
 
+def test_partitions_without_docs_are_committed(spark, tmp_path):
+    """A partition no doc hashes to still gets its lineage row: after
+    one run() nothing is pending, so a second run() commits nothing
+    and leaves both snapshot ids where they were."""
+    docs, media = fixtures.gen_corpus(3, seed=13)
+    d, m = docs_df(spark, docs), media_df(spark, media)
+    runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=8,
+                            batch_partitions=8)
+    runner.run(d, m, run_id="sparse")
+    assert runner.committed_partitions("sparse") == set(range(8))
+    lin = runner.lineage.read(spark).collect()
+    assert len(lin) == 8 and sum(r.docs for r in lin) == 3
+    snaps = (runner.output.current_snapshot_id(), runner.lineage.current_snapshot_id())
+    runner.run(d, m, run_id="sparse")
+    assert (
+        runner.output.current_snapshot_id(), runner.lineage.current_snapshot_id()
+    ) == snaps
+
+
 def test_crashed_halfway_commit_is_invisible(spark, tmp_path):
     """A manifest written but not HEAD-swung (crash between the two
     steps) must be invisible to readers and harmless to re-append."""
