@@ -443,27 +443,19 @@ def ivf_topk(
 ) -> DataFrame:
     """Single-probe face of the IVF index (back-compat signature).
     The index is built at most once per (input identity, n_centroids,
-    seed): the default path hashes the source schema + file list +
-    file sizes/mtimes, so regenerating the data in place gets a fresh
-    index, and ivf_build's marker makes every later call a pure read —
-    no KMeans fit in the probe path, no session-bound caching (the
-    returned frames always belong to the CURRENT session)."""
+    seed): the default path is keyed by ``runner.input_fingerprint``
+    (the runner's one input-identity rule: schema + file list + file
+    sizes/mtimes + a 64-row head), so regenerating the data in place
+    gets a fresh index, and ivf_build's marker makes every later call a
+    pure read — no KMeans fit in the probe path, no session-bound
+    caching (the returned frames always belong to the CURRENT
+    session)."""
     import hashlib
-    import os
+
+    from ocr_tool_spark.plans import runner
 
     if index_path is None:
-        basis = [vec_col, str(n_centroids), str(seed), embeddings.schema.simpleString()]
-        files = sorted(embeddings.inputFiles())
-        for f in files:
-            basis.append(f)
-            local = f.removeprefix("file:")
-            if os.path.exists(local):
-                st = os.stat(local)
-                basis.append(f"{st.st_size}:{st.st_mtime_ns}")
-        if not files:
-            # in-memory input (tests): no file identity — use a bounded
-            # content sample, same discipline as runner.input_fingerprint
-            basis.append(repr(embeddings.limit(64).collect()))
+        basis = [runner.input_fingerprint(embeddings), vec_col, str(n_centroids), str(seed)]
         key = hashlib.sha256("|".join(basis).encode()).hexdigest()[:16]
         index_path = f"/tmp/ocr_ivf_index/{key}"
     assigned, centroids = ivf_build(

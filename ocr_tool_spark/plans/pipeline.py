@@ -3,7 +3,7 @@
     explode -> route
       text branch : dom_blocks_udf (one Python stage) -> native HOF
                     densitometry scoring + assembly
-      media branch: distinct media_ref semi-join into media_store ->
+      media branch: distinct media_ref join into media_store ->
                     fused XY-cut + reading-order + template-OCR UDF
                     (one Python stage, one OCR per *distinct* ref) ->
                     joined back to spans
@@ -20,18 +20,17 @@ media it costs ~nothing (the exchange carries refs, not bitmaps).
 
 Verified with the event-log profile (scripts/scaling_bench.py): the
 two dominant stages — text scan→explode→DOM-UDF→partial-agg and
-semi-join→page-explode→OCR-UDF→page-regroup — each run at 0.85-0.98
+ref-join→page-explode→OCR-UDF→page-regroup — each run at 0.85-0.98
 task-parallel utilization at 32 cores; the plan has no serial hot
 spot. Known, accepted cost: the docs table is scanned three times
 (text branch, media branch, distinct-ref derivation — the last is
 column-pruned to `spans` only). Fusing them needs a cache/checkpoint
 barrier whose write cost exceeds a pruned columnar re-scan at every
 scale we measured; the resumable runner persists the exploded frame
-instead, which serves the same purpose per partition batch. The
-runner also asks for a page-sized OCR fan-out (`size_ocr_by_pages`),
-whose page count is a fourth, eager pass: it re-derives the refs from
-another `spans` scan of the batch and semi-joins the media store with
-its payload column pruned.
+instead, which serves the same purpose per partition batch. Building
+the plan runs no Spark job: the OCR fan-out is sized from a page count
+the caller passes in (the runner counts once per run), never from an
+action on the plan.
 """
 
 from __future__ import annotations
@@ -45,39 +44,29 @@ from ocr_tool_spark.functions.ocr import ocr_media_udf
 from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
 
 
-def referenced_media(media_spans: DataFrame, media_store: DataFrame) -> DataFrame:
-    """-> the media_store rows the OCR stage sees: referenced by
-    ``media_spans`` (one semi-join on the distinct refs) and holding at
-    least one page. n_pages <= 0 (empty/malformed media) must degrade to
-    "" like the single-call read_media path — without the filter,
-    sequence(0, -1) yields a descending [0,-1] and the UDF reshape
-    crashes the job."""
-    refs = media_spans.select("media_ref").distinct()
-    return media_store.join(refs, "media_ref", "left_semi").filter(
-        F.col("n_pages") > 0
-    )
+def referenced_media(refs: DataFrame, media_store: DataFrame) -> DataFrame:
+    """-> the media_store rows the OCR stage sees, one per distinct row
+    of ``refs`` (media_ref plus any key the caller keeps, such as the
+    runner's partition_id) whose media holds at least one page.
+    n_pages <= 0 (empty/malformed media) must degrade to "" like the
+    single-call read_media path — without the filter, sequence(0, -1)
+    yields a descending [0,-1] and the UDF reshape crashes the job."""
+    return media_store.join(refs.distinct(), "media_ref").filter(F.col("n_pages") > 0)
 
 
-def ocr_fan_out(live: DataFrame) -> int:
-    """OCR-stage partition count for the pages of ``live`` (see
-    referenced_media): one per page, at most 8 per core, at least 1.
+def ocr_fan_out(parallelism: int, ocr_pages: int | None) -> int:
+    """OCR-stage partition count: one per referenced page, at most 8 per
+    core, at least 1; 8 per core when the page count is not known.
 
-    Eager: runs one action, ``sum(n_pages)``, which re-derives the refs
-    from a full scan of the media spans' source (the ``spans`` column)
-    and semi-joins the media store; only the store's ``bitmap`` is
-    pruned. Every Python-worker task costs ~0.1-0.3 s on a 4-vCPU host
-    even when its partition is empty, so for a small runner batch (3
-    pages) the count pays for itself many times over against a fixed
-    8*cores (32-task) fan-out. Once pages reach 8*cores the result is
-    the cap and the count is pure added cost, so only callers whose
-    batches are known to be small should pay it."""
-    par = live.sparkSession.sparkContext.defaultParallelism
-    pages = live.agg(F.sum("n_pages")).first()[0] or 0
-    return max(1, min(8 * par, pages))
+    Every Python-worker task costs ~0.1-0.3 s on a 4-vCPU host even
+    when its partition is empty, so a small runner batch (3 pages)
+    would pay for a fixed 8*cores (32-task) fan-out many times over."""
+    cap = 8 * parallelism
+    return cap if ocr_pages is None else max(1, min(cap, ocr_pages))
 
 
 def ocr_referenced_media(
-    media_spans: DataFrame, media_store: DataFrame, size_by_pages: bool = False
+    media_spans: DataFrame, media_store: DataFrame, ocr_pages: int | None = None
 ) -> DataFrame:
     """-> (media_ref, text, ocr_ms): one OCR invocation per distinct
     referenced media payload.
@@ -90,11 +79,11 @@ def ocr_referenced_media(
     by a small-text shuffle; ocr_ms is the summed page cost so lineage
     percentiles keep meaning.
 
-    The page frame is round-robined to 8*cores partitions, or with
-    ``size_by_pages`` to ``ocr_fan_out`` partitions, which costs an
-    eager page count while the plan is built.
+    The page frame is round-robined to ``ocr_fan_out`` partitions:
+    ``ocr_pages`` is the referenced page count when the caller knows it
+    (None: 8*cores).
     """
-    live = referenced_media(media_spans, media_store)
+    live = referenced_media(media_spans.select("media_ref"), media_store)
     res = F.col("_ocr")
     pages = live.select(
         "media_ref",
@@ -107,7 +96,7 @@ def ocr_referenced_media(
             )
         ).alias("page_idx", "page"),
     )
-    # OCR-stage task granularity: AQE coalesces the upstream semi-join
+    # OCR-stage task granularity: AQE coalesces the upstream ref join
     # output by BYTE size, but OCR cost-per-byte is ~1000x the rest of
     # the plan, so byte-balanced partitions under-parallelize the most
     # expensive stage (measured: 11 coalesced tasks on 8 cores with a
@@ -115,13 +104,12 @@ def ocr_referenced_media(
     # pages to an explicit count instead. 8*cores is the right count
     # once pages outnumber it, as they do at scale; below that every
     # empty Python task still costs ~0.1-0.3 s, so small batches (the
-    # runner's) size it by their pages — ocr_fan_out, eager. Do not
-    # size it with an .rdd.getNumPartitions() probe: under AQE that
-    # materializes the semi-join's query stages, bitmaps included, at
-    # plan-construction time and the shuffle runs twice (ADVICE r3,
-    # medium).
+    # runner's) size it by their pages. Do not size it with an
+    # .rdd.getNumPartitions() probe: under AQE that materializes the
+    # ref join's query stages, bitmaps included, at plan-construction
+    # time and the shuffle runs twice (ADVICE r3, medium).
     par = live.sparkSession.sparkContext.defaultParallelism
-    pages = pages.repartition(ocr_fan_out(live) if size_by_pages else 8 * par)
+    pages = pages.repartition(ocr_fan_out(par, ocr_pages))
     per = pages.withColumn(
         "_ocr", ocr_media_udf("page", "width", "height", F.lit(1))
     ).select(
@@ -154,11 +142,11 @@ def ocr_referenced_media(
 def extract_spans(
     docs: DataFrame,
     media_store: DataFrame | None = None,
-    size_ocr_by_pages: bool = False,
+    ocr_pages: int | None = None,
 ) -> DataFrame:
     """Span-level extraction: one row per span with extracted text.
     Columns: doc_id, kind, text, media_ref, offset, ocr_ms (null on the
-    text branch). ``size_ocr_by_pages``: see ocr_referenced_media."""
+    text branch). ``ocr_pages``: see ocr_referenced_media."""
     spans = explode_spans(docs)
     text_spans, media_spans = route(spans)
 
@@ -179,9 +167,7 @@ def extract_spans(
             F.lit(None).cast("double").alias("ocr_ms"),
         )
     else:
-        ocr_res = ocr_referenced_media(
-            media_spans, media_store, size_by_pages=size_ocr_by_pages
-        )
+        ocr_res = ocr_referenced_media(media_spans, media_store, ocr_pages)
         media_out = (
             media_spans.select("doc_id", "media_ref", "offset")
             .join(F.broadcast(ocr_res), "media_ref", "left")

@@ -11,19 +11,19 @@ Execution model, designed for the 10^12-doc table:
    pruning comes from the table layout itself.
 2. **Commit loop**: pending partitions (all minus those in the lineage
    table for this run_id — the C5 anti-join, done driver-side on the
-   tiny lineage frame) are processed in batches. Each batch is one
-   pass: scan pruned input → extract_spans → reassemble → append to
-   the output SnapshotTable → append one lineage row per partition.
-   That pass runs as ~20 Spark jobs (measured 21.5 per batch on a
-   60-doc, 2-batch run: AQE query stages, the OCR page count, the
-   output write, the per-partition metrics and the lineage write), so
-   a small batch costs seconds of fixed overhead. Each Python-worker
+   tiny lineage frame) are processed in batches, after one pruned pass
+   that counts the OCR pages each of them references
+   (``referenced_pages``). Each batch is one pass: scan pruned input →
+   extract_spans → reassemble → append to the output SnapshotTable →
+   append one lineage row per partition. It runs ~12 Spark jobs (AQE
+   stages of the output write, the per-partition metrics, the lineage
+   write) and each run() adds 7-8 (fingerprint, stage write or lineage
+   lookup, page count): 19.5 per batch over two 1-batch run() calls,
+   so a small batch costs seconds of fixed overhead. Each Python-worker
    task costs ~0.1-0.3 s on a 4-vCPU host even when its partition is
-   empty, so the batch's Python stages are sized by their work: the
-   OCR fan-out by the referenced page count (pipeline.ocr_fan_out, an
-   eager pruned pass over the batch; once a batch's pages reach
-   8*cores it returns the cap and is pure added cost) and the lineage
-   rows go through a pyarrow Table (no Python task).
+   empty, so the OCR fan-out is the batch's summed page count
+   (pipeline.ocr_fan_out) and the lineage rows go through a pyarrow
+   Table (no Python task).
 3. **Crash anywhere**: output appends are idempotent by batch_id
    (SnapshotTable contract), lineage is written after output, so on
    resume a half-committed batch is either skipped (lineage present) or
@@ -50,8 +50,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ocr_tool_spark.constants import KIND_MEDIA, KIND_TEXT
-from ocr_tool_spark.plans.pipeline import extract_spans
-from ocr_tool_spark.operators.spans import reassemble
+from ocr_tool_spark.plans.pipeline import extract_spans, referenced_media
+from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
 from ocr_tool_spark.storage.adapter import SnapshotTable
 
 LINEAGE_SCHEMA = (
@@ -102,6 +102,21 @@ def input_fingerprint(docs: DataFrame) -> str:
 def with_partition_id(docs: DataFrame, n_partitions: int) -> DataFrame:
     return docs.withColumn(
         "partition_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_partitions)).cast("int")
+    )
+
+
+def referenced_pages(staged: DataFrame, media_store: DataFrame, n_partitions: int) -> DataFrame:
+    """-> (partition_id, pages): the OCR pages each partition's docs
+    reference (the ``referenced_media`` rule), in one pass that reads
+    the staged spans and the store's media_ref and n_pages, never its
+    bitmap. A ref shared by several partitions counts once in each, so
+    a multi-partition batch may get more OCR tasks than it has pages —
+    only below the 8*cores cap, which no count raises."""
+    media_spans = with_partition_id(route(explode_spans(staged))[1], n_partitions)
+    return (
+        referenced_media(media_spans.select("partition_id", "media_ref"), media_store)
+        .groupBy("partition_id")
+        .agg(F.sum("n_pages").alias("pages"))
     )
 
 
@@ -194,18 +209,27 @@ class PipelineRunner:
         if max_batches is not None:
             batches = batches[:max_batches]
 
+        if not batches:
+            return run_id
+        # one read serves the page count and every batch; with the schema
+        # given, no job reads a parquet footer to infer it
+        staged = self.spark.read.schema(
+            with_partition_id(docs, self.n_partitions).schema
+        ).parquet(stage)
+        pages = {}
+        if media_store is not None:
+            todo = staged.filter(F.col("partition_id").isin([p for b in batches for p in b]))
+            pages = dict(referenced_pages(todo, media_store, self.n_partitions).collect())
+
         for batch in batches:
             t0 = time.perf_counter()
             batch_id = f"{run_id}/p{batch[0]:05d}-p{batch[-1]:05d}"
-            part = self.spark.read.parquet(stage).filter(
-                F.col("partition_id").isin([int(p) for p in batch])
-            )
+            part = staged.filter(F.col("partition_id").isin(batch))
+            ocr_pages = sum(pages.get(p, 0) for p in batch)
             # partition_id is a pure function of doc_id — recompute instead
             # of joining it back (saves a shuffle per batch)
             spans = with_partition_id(
-                extract_spans(
-                    part.select("doc_id", "spans"), media_store, size_ocr_by_pages=True
-                ),
+                extract_spans(part.select("doc_id", "spans"), media_store, ocr_pages),
                 self.n_partitions,
             )
             spans.persist()
@@ -218,22 +242,7 @@ class PipelineRunner:
                     spans.select("doc_id", "kind", "text", "media_ref", "offset"),
                     salt=self.salt,
                 ).sortWithinPartitions("doc_id")
-                # D9: observe() rides the commit job — doc/span counts come
-                # out of the append action itself, no extra pass
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                out = out.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum(F.size("spans")).alias("spans"),
-                )
-                # obs.get blocks until the observed plan executes — which
-                # never happens if the append was an idempotent no-op
-                already = batch_id in self.output.committed_batches()
                 snapshot_id = self.output.append(out, batch_id=batch_id)
-                observed = {} if already else dict(obs.get)
-
                 metrics = (
                     spans.groupBy("partition_id")
                     .agg(
@@ -249,7 +258,7 @@ class PipelineRunner:
             finally:
                 spans.unpersist()
             elapsed = max(time.perf_counter() - t0, 1e-9)
-            total_docs = int(observed.get("docs") or sum(m.docs for m in metrics))
+            total_docs = sum(m.docs for m in metrics)
             committed_at = datetime.now(timezone.utc)
             # one row per partition of the batch, spans or not: a
             # partition without a lineage row stays pending, and every

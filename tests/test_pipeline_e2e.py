@@ -6,7 +6,6 @@ gate (pass rate = 100%) plus the metamorphic properties."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 import refspec
 from ocr_tool_spark import fixtures
@@ -107,14 +106,17 @@ def _fan_out_store(spark, tmp_path):
     return spark.read.parquet(path)
 
 
+def _media_docs(spark, refs):
+    return docs_df(spark, [{"doc_id": f"d{i}", "spans": [
+        {"kind": "media", "text": None, "media_ref": r, "offset": 0},
+        {"kind": "media", "text": None, "media_ref": refs[0], "offset": 1},
+    ]} for i, r in enumerate(refs)])
+
+
 def _media_spans(spark, refs):
     from ocr_tool_spark.operators.spans import route
 
-    docs = [{"doc_id": f"d{i}", "spans": [
-        {"kind": "media", "text": None, "media_ref": r, "offset": 0},
-        {"kind": "media", "text": None, "media_ref": refs[0], "offset": 1},
-    ]} for i, r in enumerate(refs)]
-    return route(explode_spans(docs_df(spark, docs)))[1]
+    return route(explode_spans(_media_docs(spark, refs)))[1]
 
 
 def _ocr_repartitions(frame):
@@ -130,47 +132,69 @@ def _ocr_repartitions(frame):
     (["m0", "missing"], 0),      # nothing qualifies: floor of 1
 ])
 def test_ocr_fan_out_follows_referenced_pages(spark, tmp_path, refs, pages):
-    """With size_by_pages the OCR stage's round-robin repartition is
-    sized min(8*defaultParallelism, referenced pages), floor 1: each
-    Python-worker task costs a fixed ~0.1-0.3 s even when empty."""
+    """The runner's page count, passed as ``ocr_pages``, sizes the OCR
+    stage's round-robin repartition min(8*defaultParallelism, pages),
+    floor 1: each Python-worker task costs a fixed ~0.1-0.3 s even
+    when empty."""
     from ocr_tool_spark.plans.pipeline import ocr_referenced_media
+    from ocr_tool_spark.plans.runner import referenced_pages
 
     store = _fan_out_store(spark, tmp_path)
-    ocr_res = ocr_referenced_media(_media_spans(spark, refs), store, size_by_pages=True)
+    counted = sum(n for _, n in referenced_pages(_media_docs(spark, refs), store, 1).collect())
+    assert counted == pages
+    ocr_res = ocr_referenced_media(_media_spans(spark, refs), store, ocr_pages=counted)
     cap = 8 * spark.sparkContext.defaultParallelism
     assert _ocr_repartitions(ocr_res) == [max(1, min(cap, pages))]
 
 
+def _built_jobs(spark, build):
+    """-> (what ``build()`` returned, ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("ocr-plan-build", "building an extraction plan")
+    try:
+        built = build()
+        return built, sc.statusTracker().getJobIdsForGroup("ocr-plan-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_default_plan_runs_no_job_and_keeps_8x_fan_out(spark, tmp_path):
-    """Without size_by_pages building the plan is lazy — no page count
-    job — and the OCR fan-out stays 8*defaultParallelism."""
+    """Without a page count building the plan is lazy — no job — and
+    the OCR fan-out stays 8*defaultParallelism."""
     from ocr_tool_spark.plans.pipeline import ocr_referenced_media
 
     store = _fan_out_store(spark, tmp_path)
     spans = _media_spans(spark, ["m2", "m3"])
-    sc = spark.sparkContext
-    sc.setJobGroup("ocr-plan-build", "building the default OCR plan")
-    try:
-        ocr_res = ocr_referenced_media(spans, store)
-        built = sc.statusTracker().getJobIdsForGroup("ocr-plan-build")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert built == []
-    assert _ocr_repartitions(ocr_res) == [8 * sc.defaultParallelism]
+    ocr_res, jobs = _built_jobs(spark, lambda: ocr_referenced_media(spans, store))
+    assert jobs == []
+    assert _ocr_repartitions(ocr_res) == [8 * spark.sparkContext.defaultParallelism]
+
+
+def test_plan_with_a_page_count_runs_no_job(spark, tmp_path):
+    """The page count is a plain value: building ``extract_spans`` with
+    it runs no job, and the OCR stage gets exactly that many tasks."""
+    from ocr_tool_spark.plans.pipeline import extract_spans
+
+    store = _fan_out_store(spark, tmp_path)
+    docs = _media_docs(spark, ["m3"])
+    spans, jobs = _built_jobs(spark, lambda: extract_spans(docs, store, ocr_pages=3))
+    assert jobs == []
+    assert _ocr_repartitions(spans) == [3]
 
 
 def test_ocr_page_count_never_reads_the_payload(spark, tmp_path):
-    """The page count that sizes the OCR fan-out is metadata-only on
-    the media store: its scan reads media_ref and n_pages, never
-    bitmap."""
-    from ocr_tool_spark.plans.pipeline import ocr_fan_out, referenced_media
+    """The runner's per-run page count is metadata-only on the media
+    store: its scan reads media_ref and n_pages, never bitmap."""
+    from ocr_tool_spark.plans.runner import PipelineRunner, referenced_pages
 
     store = _fan_out_store(spark, tmp_path)
-    live = referenced_media(_media_spans(spark, ["m2", "m3"]), store)
-    assert ocr_fan_out(live) == 5
-    count = live.agg(F.sum("n_pages"))
+    docs = _media_docs(spark, ["m2", "m3", "m0"])
+    stage = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=1).stage_input(docs, "r")
+    count = referenced_pages(spark.read.parquet(stage), store, n_partitions=1)
     plan = count._jdf.queryExecution().executedPlan().toString()
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
-    assert len(scans) == 1
-    assert "ReadSchema: struct<media_ref:string,n_pages:int>" in scans[0]
-    assert "bitmap" not in scans[0]
+    store_scans = [ln for ln in scans if "n_pages" in ln]
+    assert len(scans) == 2 and len(store_scans) == 1
+    assert "ReadSchema: struct<media_ref:string,n_pages:int>" in store_scans[0]
+    assert not any("bitmap" in ln for ln in scans)
+    assert [tuple(r) for r in count.collect()] == [(0, 5)]

@@ -94,6 +94,34 @@ def test_partitions_without_docs_are_committed(spark, tmp_path):
     ) == snaps
 
 
+def test_referenced_pages_match_a_python_count(spark, tmp_path):
+    """The runner's per-partition page count over its staged table
+    equals a plain-Python count: per partition pmod(xxhash64(doc_id),
+    n), the pages of the distinct refs its docs reference (n_pages > 0).
+    A ref shared by several partitions counts once in each."""
+    import refspec_dataprep as spec
+    from ocr_tool_spark.plans.runner import referenced_pages
+
+    docs, media = fixtures.gen_corpus(60, seed=13)
+    n = 8
+    pages_of = {m["media_ref"]: m["n_pages"] for m in media}
+    refs = {}
+    for d in docs:
+        pid = spec.signed64(spec.xxh64(d["doc_id"].encode("utf-8"))) % n
+        refs.setdefault(pid, set()).update(
+            s["media_ref"] for s in d["spans"] if s["kind"] == "media"
+        )
+    want = {p: sum(pages_of.get(r, 0) for r in rs if pages_of.get(r, 0) > 0)
+            for p, rs in refs.items()}
+    # the corpus does share refs across partitions
+    assert sum(len(rs) for rs in refs.values()) > len(set().union(*refs.values()))
+
+    runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=n)
+    staged = spark.read.parquet(runner.stage_input(docs_df(spark, docs), "pages"))
+    got = dict(referenced_pages(staged, media_df(spark, media), n).collect())
+    assert got == {p: v for p, v in want.items() if v > 0}
+
+
 def test_crashed_halfway_commit_is_invisible(spark, tmp_path):
     """A manifest written but not HEAD-swung (crash between the two
     steps) must be invisible to readers and harmless to re-append."""
