@@ -18,6 +18,8 @@ bounds any single bucket's share of probes.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -430,6 +432,26 @@ def ivf_search(
     )
 
 
+def _index_code() -> str:
+    """The code half of the default IVF index key: a hash of this
+    module's source, which holds ivf_build (read through the loader, so
+    a zipped package hashes the same bytes)."""
+    return hashlib.sha256(__loader__.get_data(__file__)).hexdigest()[:16]
+
+
+def ivf_index_dir(embeddings: DataFrame, vec_col: str, n_centroids: int, seed: int) -> str:
+    """Default index dir of ``ivf_topk``: keyed by the input identity
+    (``runner.input_fingerprint``: schema + file list + file
+    sizes/mtimes + a 64-row head), the IVF params and the source of the
+    code that builds the index, so neither regenerated data nor a
+    changed ``ivf_build`` probes a stale index."""
+    from ocr_tool_spark.plans import runner
+
+    basis = [runner.input_fingerprint(embeddings), vec_col, str(n_centroids), str(seed),
+             _index_code()]
+    return f"/tmp/ocr_ivf_index/{hashlib.sha256('|'.join(basis).encode()).hexdigest()[:16]}"
+
+
 def ivf_topk(
     embeddings: DataFrame,
     query_vec_id: int,
@@ -442,22 +464,12 @@ def ivf_topk(
     index_path: str | None = None,
 ) -> DataFrame:
     """Single-probe face of the IVF index (back-compat signature).
-    The index is built at most once per (input identity, n_centroids,
-    seed): the default path is keyed by ``runner.input_fingerprint``
-    (the runner's one input-identity rule: schema + file list + file
-    sizes/mtimes + a 64-row head), so regenerating the data in place
-    gets a fresh index, and ivf_build's marker makes every later call a
-    pure read — no KMeans fit in the probe path, no session-bound
-    caching (the returned frames always belong to the CURRENT
-    session)."""
-    import hashlib
-
-    from ocr_tool_spark.plans import runner
-
-    if index_path is None:
-        basis = [runner.input_fingerprint(embeddings), vec_col, str(n_centroids), str(seed)]
-        key = hashlib.sha256("|".join(basis).encode()).hexdigest()[:16]
-        index_path = f"/tmp/ocr_ivf_index/{key}"
+    The index is built at most once per ``ivf_index_dir`` key (input
+    identity, n_centroids, seed, index code), and ivf_build's marker
+    makes every later call a pure read — no KMeans fit in the probe
+    path, no session-bound caching (the returned frames always belong
+    to the CURRENT session)."""
+    index_path = index_path or ivf_index_dir(embeddings, vec_col, n_centroids, seed)
     assigned, centroids = ivf_build(
         embeddings, index_path, n_centroids, id_col, vec_col, seed
     )

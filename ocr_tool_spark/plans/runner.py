@@ -11,19 +11,20 @@ Execution model, designed for the 10^12-doc table:
    pruning comes from the table layout itself.
 2. **Commit loop**: pending partitions (all minus those in the lineage
    table for this run_id — the C5 anti-join, done driver-side on the
-   tiny lineage frame) are processed in batches, after one pruned pass
+   tiny lineage files) are processed in batches, after one pruned pass
    that counts the OCR pages each of them references
    (``referenced_pages``). Each batch is one pass: scan pruned input →
    extract_spans → reassemble → append to the output SnapshotTable →
    append one lineage row per partition. It runs ~12 Spark jobs (AQE
    stages of the output write, the per-partition metrics, the lineage
-   write) and each run() adds 7-8 (fingerprint, stage write or lineage
-   lookup, page count): 19.5 per batch over two 1-batch run() calls,
-   so a small batch costs seconds of fixed overhead. Each Python-worker
-   task costs ~0.1-0.3 s on a 4-vCPU host even when its partition is
-   empty, so the OCR fan-out is the batch's summed page count
-   (pipeline.ocr_fan_out) and the lineage rows go through a pyarrow
-   Table (no Python task).
+   write) and each run() adds 5-8 (fingerprint, page count, and the
+   stage write on the first call; the pending-partition lookup reads
+   the lineage files with pyarrow, no job): 19 per batch over two
+   1-batch run() calls, so a small batch costs seconds of fixed
+   overhead. Each Python-worker task costs ~0.1-0.3 s on a 4-vCPU host
+   even when its partition is empty, so the OCR fan-out is the batch's
+   summed page count (pipeline.ocr_fan_out) and the lineage rows go
+   through a pyarrow Table (no Python task).
 3. **Crash anywhere**: output appends are idempotent by batch_id
    (SnapshotTable contract), lineage is written after output, so on
    resume a half-committed batch is either skipped (lineage present) or
@@ -43,6 +44,7 @@ import time
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -140,16 +142,14 @@ class PipelineRunner:
     # -- lineage --------------------------------------------------------
 
     def committed_partitions(self, run_id: str) -> set[int]:
-        ldf = self.lineage.read(self.spark)
-        if ldf is None:
+        """Partitions with a lineage row for ``run_id``. Reads two
+        columns of the lineage files with pyarrow on the driver: no
+        Spark job."""
+        files = self.lineage.files()
+        if not files:
             return set()
-        rows = (
-            ldf.filter(F.col("run_id") == run_id)
-            .select("partition_id")
-            .distinct()
-            .collect()
-        )
-        return {r.partition_id for r in rows}
+        t = pq.read_table(files, columns=["partition_id"], filters=[("run_id", "==", run_id)])
+        return set(t["partition_id"].to_pylist())
 
     # -- staging --------------------------------------------------------
 

@@ -8,7 +8,20 @@ Scale rationale (SURVEY.md §4):
 - advisory partition size 64 MB keeps post-shuffle partitions
   executor-memory-friendly;
 - Arrow batch size capped so binary bitmap columns don't blow up the
-  Python-worker transfer (SURVEY.md §7 hard-part #5).
+  Python-worker transfer (SURVEY.md §7 hard-part #5);
+- generated-code cache sized to hold every plan the engine repeats.
+  Spark caches compiled whole-stage classes in an LRU keyed by their
+  source, 100 entries by default. One ``curate_corpus`` action has
+  ~150 classes, so at 100 entries it recompiled ~148 of them on every
+  action (and the JIT compiled each fresh class again); a runner batch
+  has ~70-90 and fits either way; the whole Tier-1 test session, one
+  session, has 1,004 (mean 2.7 KB of bytecode each). 2,000 entries
+  hold all of them with room to spare: a repeated curation action now
+  compiles 0-2 (scripts/codegen_census.py). Class names leave out the
+  codegen stage id, so a subtree AQE numbers differently on another
+  run reuses its class. ``maxEntries`` is static: it takes effect only
+  in a session this factory starts; a session that already exists
+  (getOrCreate) keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -55,6 +68,10 @@ def build_session(
         # per stage at sf0.1, ~0.5 s of pure scheduling per query. At
         # cluster scale AQE sizes those stages by bytes either way.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # static: sized to hold every plan the engine repeats (see the
+        # module docstring); only a session this call starts gets it
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

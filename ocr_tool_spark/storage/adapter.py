@@ -62,12 +62,16 @@ class SnapshotTable:
 
     # -- read -----------------------------------------------------------
 
+    def files(self, snapshot_id: int | None = None) -> list[str]:
+        """The data files of the table at HEAD (default) or at a
+        historical snapshot, in commit order."""
+        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
+        return [f for fs in self._load_manifest(sid)["batches"].values() for f in fs]
+
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame | None:
         """Read the table at HEAD (default) or at a historical snapshot.
         Returns None for an empty table (no snapshot / no files)."""
-        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        manifest = self._load_manifest(sid)
-        files = [f for fs in manifest["batches"].values() for f in fs]
+        files = self.files(snapshot_id)
         if not files:
             return None
         return spark.read.parquet(*files)

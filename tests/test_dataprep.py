@@ -184,6 +184,23 @@ def test_ivf_topk_runs_on_driver_corpus(spark, sf_dir_mid):
     assert [(r.vec_id, r.cos_sim) for r in rows] == brute
 
 
+def test_ivf_index_dir_is_keyed_by_input_params_and_code(spark, monkeypatch):
+    """The default IVF index dir repeats for the same input, params and
+    index code, and moves when any of them changes: an index an older
+    ivf_build wrote is never probed by a newer one."""
+    import hashlib
+
+    e = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                              "vec_id long, embedding array<float>")
+    key = similarity.ivf_index_dir(e, "embedding", 8, 42)
+    assert similarity.ivf_index_dir(e, "embedding", 8, 42) == key
+    assert similarity.ivf_index_dir(e, "embedding", 8, 43) != key
+    with open(similarity.__file__, "rb") as f:
+        assert similarity._index_code() == hashlib.sha256(f.read()).hexdigest()[:16]
+    monkeypatch.setattr(similarity, "_index_code", lambda: "changed-ivf-build")
+    assert similarity.ivf_index_dir(e, "embedding", 8, 42) != key
+
+
 def test_minhash_oversized_bucket_star_pairs(spark):
     """A duplicate cluster LARGER than max_bucket must still link every
     copy to the canonical survivor (r1 dropped all pairs in over-cap

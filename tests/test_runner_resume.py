@@ -94,6 +94,23 @@ def test_partitions_without_docs_are_committed(spark, tmp_path):
     ) == snaps
 
 
+def test_committed_partitions_runs_no_job(spark, tmp_path):
+    """The resume lookup reads the lineage files with pyarrow: after the
+    first of two batches it finds that batch's partition, for its run_id
+    only, and starts no Spark job."""
+    from test_pipeline_e2e import _built_jobs
+
+    docs, media = fixtures.gen_corpus(8, seed=1)
+    runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=2,
+                            batch_partitions=1)
+    runner.run(docs_df(spark, docs), media_df(spark, media), run_id="r", max_batches=1)
+    found, jobs = _built_jobs(
+        spark, lambda: (runner.committed_partitions("r"), runner.committed_partitions("q"))
+    )
+    assert found == ({0}, set())
+    assert list(jobs) == []
+
+
 def test_referenced_pages_match_a_python_count(spark, tmp_path):
     """The runner's per-partition page count over its staged table
     equals a plain-Python count: per partition pmod(xxhash64(doc_id),
