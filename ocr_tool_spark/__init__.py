@@ -13,13 +13,19 @@ constants    shared *data* (tag sets, integer thresholds, entities,
              raster geometry) used by the engine, the fixture
              generator, and the independent plain-Python reference
              spec in tests/refspec.py
-functions/   glyph font + rendering, batched HTML tokenizer,
-             batched numpy layout/OCR, text-analysis functions
+session      SparkSession factory with the engine's tuned config
+fixtures     deterministic synthetic interleaved corpus + media store
+functions/   glyph font + rendering, batched HTML tokenizer and
+             boilerplate scoring, batched numpy layout/OCR
 operators/   explode/route, (salted) reassembly, span equality,
-             dedup + similarity operators
-sources/     parquet table loaders + the snapshot/manifest table
-             store (local Iceberg stand-in)
-plans/       the end-to-end extraction plan builder + resumable runner
+             static scan-parallelism estimate
+sources/     declared schemas + parquet/fixture table loaders
+storage/     the snapshot/manifest table store (local Iceberg stand-in)
+plans/       the end-to-end extraction plan builder, the resumable
+             runner, and the driver queries + their oracles
+dataprep/    training-data operators: dedup, similarity (k-NN/ANN),
+             text stats, media features, packing, decontamination,
+             and the composed curation DAG
 """
 
 __version__ = "0.1.0"

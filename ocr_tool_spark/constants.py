@@ -95,9 +95,6 @@ SPACE_GAP = 6
 OCR_LINE_JOIN = "\n"    # lines within a leaf block
 OCR_PAGE_JOIN = "\n\n"  # pages within a multi-page (pdf) media span
 
-#: Characters the font covers; fixture text is drawn from these only.
-OCR_ALPHABET = "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 .,-"
-
 # --------------------------------------------------------------------------
 # Span / table shapes (BASELINE.json:15)
 # --------------------------------------------------------------------------

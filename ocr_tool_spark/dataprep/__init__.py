@@ -1,6 +1,9 @@
 """Training-data pipeline operators (dedup, similarity, textstats,
 media features, packing, decontam, curate). See SURVEY.md §2 K1-K21;
-K14-K16 are retired."""
+K14-K16 are retired.
+
+Column contract: document operators read ``doc_id``/``text`` and
+embedding operators read ``vec_id``/``embedding``."""
 
 from __future__ import annotations
 
@@ -14,17 +17,15 @@ from pyspark.sql.types import StructType
 
 def arrow_doc_stage(
     docs: DataFrame,
-    id_col: str,
-    text_col: str,
     out_ddl: str,
     kernel: Callable[[pa.Array], list[pa.Array]],
 ) -> DataFrame:
-    """One vectorized mapInArrow pass over (id_col, text_col): per batch,
+    """One vectorized mapInArrow pass over (doc_id, text): per batch,
     `kernel(text)` returns the `out_ddl` columns, and the stage emits
-    (id_col, *those columns) with the id keeping its input type. Empty
+    (doc_id, *those columns) with doc_id keeping its input type. Empty
     batches never reach the kernel; their column types come from the
     declared schema (mapInArrow requires exact Arrow types)."""
-    ddl = f"{id_col} {docs.schema[id_col].dataType.simpleString()}, {out_ddl}"
+    ddl = f"doc_id {docs.schema['doc_id'].dataType.simpleString()}, {out_ddl}"
     schema = to_arrow_schema(StructType.fromDDL(ddl))
 
     def fn(batches):
@@ -32,10 +33,10 @@ def arrow_doc_stage(
             if batch.num_rows == 0:
                 cols = [pa.array([], type=f.type) for f in schema]
             else:
-                cols = [batch.column(id_col), *kernel(batch.column(text_col))]
+                cols = [batch.column("doc_id"), *kernel(batch.column("text"))]
             yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
-    return docs.select(id_col, text_col).mapInArrow(fn, ddl)
+    return docs.select("doc_id", "text").mapInArrow(fn, ddl)
 
 
 def keep_intermediates(

@@ -52,8 +52,6 @@ def curate_corpus(
     threshold: float = 0.6,
     n: int = 8,
     budget: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, bucket, n_tokens, shard_id, shard_offset_tokens) for
     every doc that survives near-dup dedup AND decontamination, packed
@@ -65,8 +63,8 @@ def curate_corpus(
     reachable), or (b) any of its distinct word `n`-grams appears in
     `eval_docs`. Shard ids are assigned AFTER both drops, so shards
     are gap-free over the curated corpus."""
-    pairs = minhash_lsh_pairs(docs, threshold=threshold, text_col=text_col)
-    keep = dedup_keep_list(docs, pairs, id_col=id_col)
+    pairs = minhash_lsh_pairs(docs, threshold=threshold)
+    keep = dedup_keep_list(docs, pairs)
     # persist both exclusion-id frames: whatever their size, their
     # LINEAGE is the whole MinHash chain / gram kernel — and the
     # corpus frame downstream of each has ≥2 consumers, which would
@@ -75,21 +73,21 @@ def curate_corpus(
     # level spills to disk, so corpus-scale drop frames (30-50% dup
     # web crawls — see the module docstring) degrade to disk reads,
     # not OOM
-    dup_drops = keep.filter(F.col("keep") == 0).select(id_col).persist()
-    deduped = docs.join(dup_drops, id_col, "left_anti")
+    dup_drops = keep.filter(F.col("keep") == 0).select("doc_id").persist()
+    deduped = docs.join(dup_drops, "doc_id", "left_anti")
 
     contaminated = (
-        contamination(deduped, eval_docs, n=n, id_col=id_col, text_col=text_col)
+        contamination(deduped, eval_docs, n=n)
         .filter(F.col("contaminated") == 1)
-        .select(id_col)
+        .select("doc_id")
         .persist()
     )
-    clean = deduped.join(contaminated, id_col, "left_anti")
+    clean = deduped.join(contaminated, "doc_id", "left_anti")
 
     # caller releases via dataprep.release_intermediates (LSH handles
     # plus the two exclusion frames)
     return keep_intermediates(
-        pack_shards(clean, budget=budget, text_col=text_col),
+        pack_shards(clean, budget=budget),
         dup_drops,
         contaminated,
         inherit=(keep,),

@@ -56,12 +56,7 @@ def _batch_gram_hashes(col: pa.Array, n: int):
     return sh, doc_of, valid
 
 
-def _eval_gram_hashes(
-    eval_docs: DataFrame,
-    n: int,
-    text_col: str,
-    max_grams: int = 50_000_000,
-) -> np.ndarray:
+def _eval_gram_hashes(eval_docs: DataFrame, n: int, max_grams: int) -> np.ndarray:
     """Sorted distinct uint64 gram hashes of the eval set. The fetch is
     bounded by the operator's contract (benchmarks are small) AND by an
     explicit budget: the read is LIMIT(max_grams+1)-bounded — the
@@ -78,14 +73,14 @@ def _eval_gram_hashes(
                     [pa.array([], type=pa.int64())], names=["h"]
                 )
                 continue
-            sh, _, valid = _batch_gram_hashes(batch.column(text_col), n)
+            sh, _, valid = _batch_gram_hashes(batch.column("text"), n)
             hs = np.unique(sh[valid])
             yield pa.RecordBatch.from_arrays(
                 [pa.array(hs.view(np.int64), type=pa.int64())], names=["h"]
             )
 
     tbl = (
-        eval_docs.select(text_col)
+        eval_docs.select("text")
         .mapInArrow(fn, "h bigint")
         .distinct()
         .limit(max_grams + 1)
@@ -111,9 +106,6 @@ def contamination(
     docs: DataFrame,
     eval_docs: DataFrame,
     n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_text_col: str | None = None,
     max_eval_grams: int = 50_000_000,
 ) -> DataFrame:
     """(doc_id, n_shared_grams, contaminated): per corpus doc, how many
@@ -121,9 +113,7 @@ def contamination(
     the ≥1-gram contamination flag. See the module docstring for the
     plan. `max_eval_grams` bounds the driver-side eval-hash fetch (see
     _eval_gram_hashes)."""
-    ev_sorted = _eval_gram_hashes(
-        eval_docs, n, eval_text_col or text_col, max_eval_grams
-    )
+    ev_sorted = _eval_gram_hashes(eval_docs, n, max_eval_grams)
     sc = docs.sparkSession.sparkContext
     bc = sc.broadcast(ev_sorted)
 
@@ -145,8 +135,6 @@ def contamination(
         ]
 
     sel = ensure_parallelism_floor(
-        docs.select(id_col, text_col), sc.defaultParallelism, min_bytes=32 << 20
+        docs.select("doc_id", "text"), sc.defaultParallelism, min_bytes=32 << 20
     )
-    return arrow_doc_stage(
-        sel, id_col, text_col, "n_shared_grams bigint, contaminated int", kernel
-    )
+    return arrow_doc_stage(sel, "n_shared_grams bigint, contaminated int", kernel)

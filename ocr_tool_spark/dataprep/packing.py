@@ -34,7 +34,6 @@ def pack_shards(
     docs: DataFrame,
     budget: int = 2048,
     bucket_hex_len: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign every doc a training shard id so each shard holds ~`budget`
     whitespace tokens (the K10 `ws_tokens` measure).
@@ -57,7 +56,7 @@ def pack_shards(
     base = docs.select(
         "doc_id",
         F.substring(F.md5(sid), 1, bucket_hex_len).alias("bucket"),
-        F.size(F.split(normalize_text(F.col(text_col)), " "))
+        F.size(F.split(normalize_text(F.col("text")), " "))
         .cast("long")
         .alias("n_tokens"),
         # explicit null-key filter: the bucket join below would inject
@@ -98,32 +97,32 @@ def pack_shards(
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    stratum_col: str = "lang",
-    default_rate: float = 0.0,
-    hex_digits: int = 4,
-) -> DataFrame:
-    """Deterministic per-stratum downsampling: keep a doc iff the first
-    `hex_digits` of md5(doc_id) fall inside its stratum's hash band.
+# hex digits of md5(doc_id) that stratified_sample bands on
+_SAMPLE_HEX = 4
 
-    band(rate) = the first round(rate * 16^hex_digits) hex strings —
-    so the realized rate quantizes to 1/16^hex_digits (6e-5 at the
-    default 4 digits) and the SAME doc set is kept by any engine, any
-    run, any partitioning: reproducible corpus mixes are the point.
-    One scan, no shuffle, no RNG state.
+
+def stratified_sample(
+    docs: DataFrame, rates: dict[str, float], default_rate: float = 0.0
+) -> DataFrame:
+    """Deterministic per-language downsampling: keep a doc iff the first
+    4 hex digits of md5(doc_id) fall inside its `lang` stratum's hash
+    band (`rates` maps lang → rate; other langs get `default_rate`).
+
+    band(rate) = the first round(rate * 16^4) hex strings — so the
+    realized rate quantizes to 1/16^4 (1.5e-5) and the SAME doc set is
+    kept by any engine, any run, any partitioning: reproducible corpus
+    mixes are the point. One scan, no shuffle, no RNG state.
     """
-    space = 16**hex_digits
+    space = 16**_SAMPLE_HEX
 
     def cut_hex(rate: float) -> str:
         n_keep = int(round(rate * space))
         if n_keep >= space:  # keep-all: 'g' sorts above every hex string
             return "g"
-        return format(n_keep, "x").rjust(hex_digits, "0")
+        return format(n_keep, "x").rjust(_SAMPLE_HEX, "0")
 
-    band = F.substring(F.md5(F.col("doc_id").cast("string")), 1, hex_digits)
+    band = F.substring(F.md5(F.col("doc_id").cast("string")), 1, _SAMPLE_HEX)
     cut = F.lit(cut_hex(default_rate))
     for stratum, rate in sorted(rates.items()):
-        cut = F.when(F.col(stratum_col) == stratum, F.lit(cut_hex(rate))).otherwise(cut)
-    return docs.filter(band < cut).select("doc_id", stratum_col)
+        cut = F.when(F.col("lang") == stratum, F.lit(cut_hex(rate))).otherwise(cut)
+    return docs.filter(band < cut).select("doc_id", "lang")

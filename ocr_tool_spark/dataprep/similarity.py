@@ -61,43 +61,35 @@ def cosine_with_norms(a: Column, na: Column, b: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
-def _topk_vs_query(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
-    """(id, cos_sim) of the k `cand` rows nearest the single broadcast
-    query whose vector and norm each row carries as _qv/_qn: cosine
-    rounded to 6 places, ties broken by id."""
+def _topk_vs_query(cand: DataFrame, k: int) -> DataFrame:
+    """(vec_id, cos_sim) of the k `cand` rows nearest the single
+    broadcast query whose vector and norm each row carries as _qv/_qn:
+    cosine rounded to 6 places, ties broken by vec_id."""
     return (
         cand.select(
-            id_col,
+            "vec_id",
             F.round(
                 cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
+                    F.col("embedding"), norm(F.col("embedding")), F.col("_qv"), F.col("_qn")
                 ),
                 6,
             ).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), id_col)
+        .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
 
 
-def brute_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors of one stored vector. The 1-row
     query side is broadcast; the scan side streams — the plan a
     1000-executor cluster wants for single-probe lookups."""
     q = F.broadcast(
-        embeddings.filter(F.col(id_col) == query_vec_id).select(
-            F.col(vec_col).alias("_qv"), norm(F.col(vec_col)).alias("_qn")
+        embeddings.filter(F.col("vec_id") == query_vec_id).select(
+            F.col("embedding").alias("_qv"), norm(F.col("embedding")).alias("_qn")
         )
     )
-    return _topk_vs_query(
-        embeddings.filter(F.col(id_col) != query_vec_id).crossJoin(q), k, id_col, vec_col
-    )
+    return _topk_vs_query(embeddings.filter(F.col("vec_id") != query_vec_id).crossJoin(q), k)
 
 
 def srp_signatures(
@@ -106,10 +98,8 @@ def srp_signatures(
     n_bits: int = 8,
     n_tables: int = 4,
     seed: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, vec, _b0.._b{n_tables-1}) — one vectorized Arrow stage:
+    """(vec_id, embedding, _b0.._b{n_tables-1}) — one vectorized Arrow stage:
     per table t, a deterministic Gaussian hyperplane matrix H_t
     (np.random.default_rng(seed+t), the textbook SRP construction) and
     bits = sign(V @ H_tᵀ) packed into an int32 bucket id. The numpy
@@ -117,15 +107,15 @@ def srp_signatures(
     import numpy as np
     import pyarrow as pa
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
+    id_type = embeddings.schema["vec_id"].dataType.simpleString()
     # preserve the input element type (float vs double): hard-casting
     # doubles to float32 degraded downstream cosine scoring at
     # round(,6)/threshold boundaries (ADVICE r2)
-    elem_type = embeddings.schema[vec_col].dataType.elementType.simpleString()
+    elem_type = embeddings.schema["embedding"].dataType.elementType.simpleString()
     pa_elem = {"float": pa.float32(), "double": pa.float64()}.get(elem_type)
     if pa_elem is None:  # int/decimal embeddings: promote to double
         elem_type, pa_elem = "double", pa.float64()
-    out_schema = f"{id_col} {id_type}, {vec_col} array<{elem_type}>" + "".join(
+    out_schema = f"vec_id {id_type}, embedding array<{elem_type}>" + "".join(
         f", _b{t} int" for t in range(n_tables)
     )
     planes = [
@@ -136,7 +126,7 @@ def srp_signatures(
 
     def fn(batches):
         for batch in batches:
-            vecs = batch.column(vec_col)
+            vecs = batch.column("embedding")
             n = batch.num_rows
             # zero-copy ingest (VERDICT r4 wrong #3): the ListArray's
             # values buffer is already contiguous float32/64 —
@@ -150,15 +140,15 @@ def srp_signatures(
             lens = np.diff(vecs.offsets.to_numpy())
             if vecs.null_count or (lens != dim).any():
                 raise ValueError(
-                    f"{vec_col} must be non-null fixed-dim({dim}) vectors"
+                    f"embedding must be non-null fixed-dim({dim}) vectors"
                 )
             V = (
                 flat.to_numpy(zero_copy_only=False)
                 .astype(np.float64, copy=False)
                 .reshape(n, dim)
             )
-            cols = [batch.column(id_col), vecs.cast(pa.list_(pa_elem))]
-            names = [id_col, vec_col]
+            cols = [batch.column("vec_id"), vecs.cast(pa.list_(pa_elem))]
+            names = ["vec_id", "embedding"]
             for t in range(n_tables):
                 if V.size:
                     bits = (V @ planes[t].T) > 0
@@ -169,7 +159,7 @@ def srp_signatures(
                 names.append(f"_b{t}")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return embeddings.select(id_col, vec_col).mapInArrow(fn, out_schema)
+    return embeddings.select("vec_id", "embedding").mapInArrow(fn, out_schema)
 
 
 def lsh_topk(
@@ -179,8 +169,6 @@ def lsh_topk(
     dim: int = 64,
     n_bits: int = 8,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: only vectors sharing an SRP bucket with the
     query in ≥1 of n_tables are scored. Trades recall for scanning
@@ -188,14 +176,12 @@ def lsh_topk(
     # no persist: the signature stage is one cheap Arrow matmul, and the
     # two consumers (query-row lookup, corpus scan) re-run it for less
     # than a cache write costs at every tested scale
-    sig = srp_signatures(
-        embeddings, dim, n_bits, n_tables, seed=100, id_col=id_col, vec_col=vec_col
-    )
-    qrow = sig.filter(F.col(id_col) == query_vec_id)
+    sig = srp_signatures(embeddings, dim, n_bits, n_tables, seed=100)
+    qrow = sig.filter(F.col("vec_id") == query_vec_id)
     q = F.broadcast(
         qrow.select(
-            F.col(vec_col).alias("_qv"),
-            norm(F.col(vec_col)).alias("_qn"),
+            F.col("embedding").alias("_qv"),
+            norm(F.col("embedding")).alias("_qn"),
             *[F.col(f"_b{t}").alias(f"_qb{t}") for t in range(n_tables)],
         )
     )
@@ -204,8 +190,7 @@ def lsh_topk(
         m = F.col(f"_b{t}") == F.col(f"_qb{t}")
         match_any = m if match_any is None else (match_any | m)
     return _topk_vs_query(
-        sig.filter(F.col(id_col) != query_vec_id).crossJoin(q).filter(match_any),
-        k, id_col, vec_col,
+        sig.filter(F.col("vec_id") != query_vec_id).crossJoin(q).filter(match_any), k
     )
 
 
@@ -232,13 +217,13 @@ def _published_builds(spark, path: str) -> list[dict]:
     )
 
 
+# KMeans seed of every IVF build; the params rows still record it, so
+# indexes published before it became fixed keep resolving
+_IVF_SEED = 42
+
+
 def ivf_build(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
+    embeddings: DataFrame, path: str, n_centroids: int = 16
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index ONCE and persist it: KMeans coarse quantizer
     → (assigned, centroids) parquet at `path`. assigned = the corpus
@@ -270,18 +255,18 @@ def ivf_build(
 
     builds = _published_builds(spark, path)
     cur = builds[0] if builds else None
-    if cur is None or (cur["n_centroids"], cur["seed"]) != (n_centroids, seed):
+    if cur is None or (cur["n_centroids"], cur["seed"]) != (n_centroids, _IVF_SEED):
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
         token = _os.urandom(8).hex()
         base = f"{path}/builds/{token}"
-        assembled = embeddings.withColumn("_v", array_to_vector(F.col(vec_col)))
-        model = KMeans(k=n_centroids, seed=seed, featuresCol="_v").fit(assembled)
+        assembled = embeddings.withColumn("_v", array_to_vector(F.col("embedding")))
+        model = KMeans(k=n_centroids, seed=_IVF_SEED, featuresCol="_v").fit(assembled)
         assigned = (
             model.transform(assembled)
             .withColumnRenamed("prediction", "_cell")
-            .select(id_col, vec_col, "_cell")
+            .select("vec_id", "embedding", "_cell")
         )
         assigned.repartition("_cell").write.mode("overwrite").partitionBy(
             "_cell"
@@ -293,7 +278,7 @@ def ivf_build(
             cent_rows, "cell int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(f"{base}/centroids")
         spark.createDataFrame(
-            [(int(n_centroids), int(seed), token, _time.time_ns())],
+            [(int(n_centroids), _IVF_SEED, token, _time.time_ns())],
             "n_centroids int, seed int, build string, build_ts long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params/{token}")
         # newest published; if a racing overwrite clobbered the read,
@@ -374,8 +359,6 @@ def ivf_search(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
     """Probe the IVF index for each query row — fully declarative, no
@@ -389,9 +372,9 @@ def ivf_search(
     table whose id space is unrelated to corpus ids (an id collision
     would otherwise silently drop a legitimate neighbor)."""
     q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("_qv"),
+        norm(F.col("embedding")).alias("_qn"),
     )
     wc = Window.partitionBy("qid").orderBy("l2", "cell")
     cells = (
@@ -411,18 +394,18 @@ def ivf_search(
         .filter(F.col("_rn") <= nprobe)
         .select("qid", "_qv", "_qn", F.col("cell").alias("_cell"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), id_col)
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "vec_id")
     cand = assigned.join(F.broadcast(cells), "_cell")
     if exclude_self:
-        cand = cand.filter(F.col(id_col) != F.col("qid"))
+        cand = cand.filter(F.col("vec_id") != F.col("qid"))
     return (
         cand
         .select(
             "qid",
-            id_col,
+            "vec_id",
             F.round(
                 cosine_with_norms(
-                    F.col(vec_col), norm(F.col(vec_col)), F.col("_qv"), F.col("_qn")
+                    F.col("embedding"), norm(F.col("embedding")), F.col("_qv"), F.col("_qn")
                 ),
                 6,
             ).alias("cos_sim"),
@@ -439,16 +422,18 @@ def _index_code() -> str:
     return hashlib.sha256(__loader__.get_data(__file__)).hexdigest()[:16]
 
 
-def ivf_index_dir(embeddings: DataFrame, vec_col: str, n_centroids: int, seed: int) -> str:
+def ivf_index_dir(embeddings: DataFrame, n_centroids: int) -> str:
     """Default index dir of ``ivf_topk``: keyed by the input identity
     (``runner.input_fingerprint``: schema + file list + file
     sizes/mtimes + a 64-row head), the IVF params and the source of the
     code that builds the index, so neither regenerated data nor a
-    changed ``ivf_build`` probes a stale index."""
+    changed ``ivf_build`` probes a stale index. The basis still names
+    the vector column and the KMeans seed, so the key format is the
+    one existing index dirs were written under."""
     from ocr_tool_spark.plans import runner
 
-    basis = [runner.input_fingerprint(embeddings), vec_col, str(n_centroids), str(seed),
-             _index_code()]
+    basis = [runner.input_fingerprint(embeddings), "embedding", str(n_centroids),
+             str(_IVF_SEED), _index_code()]
     return f"/tmp/ocr_ivf_index/{hashlib.sha256('|'.join(basis).encode()).hexdigest()[:16]}"
 
 
@@ -458,26 +443,21 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    index_path: str | None = None,
 ) -> DataFrame:
     """Single-probe face of the IVF index (back-compat signature).
     The index is built at most once per ``ivf_index_dir`` key (input
-    identity, n_centroids, seed, index code), and ivf_build's marker
-    makes every later call a pure read — no KMeans fit in the probe
-    path, no session-bound caching (the returned frames always belong
-    to the CURRENT session)."""
-    index_path = index_path or ivf_index_dir(embeddings, vec_col, n_centroids, seed)
+    identity, n_centroids, index code), and ivf_build's marker makes
+    every later call a pure read — no KMeans fit in the probe path, no
+    session-bound caching (the returned frames always belong to the
+    CURRENT session)."""
     assigned, centroids = ivf_build(
-        embeddings, index_path, n_centroids, id_col, vec_col, seed
+        embeddings, ivf_index_dir(embeddings, n_centroids), n_centroids
     )
-    queries = embeddings.filter(F.col(id_col) == query_vec_id)
+    queries = embeddings.filter(F.col("vec_id") == query_vec_id)
     return (
-        ivf_search(assigned, centroids, queries, k, nprobe, id_col, vec_col)
-        .select(id_col, "cos_sim")
-        .orderBy(F.desc("cos_sim"), id_col)
+        ivf_search(assigned, centroids, queries, k, nprobe)
+        .select("vec_id", "cos_sim")
+        .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(k)
     )
 
@@ -485,13 +465,10 @@ def ivf_topk(
 def near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = None,
     dim: int = 64,
     n_bits: int = 8,
     n_tables: int = 4,
-    seed: int = 500,
     max_bucket: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥
@@ -516,19 +493,16 @@ def near_dup_pairs(
     member carries its vector and norm, so cosine is scored in place."""
     if block_col is not None:
         e = embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("v"),
             F.lit(0).alias("tbl"),
             F.col(block_col).alias("blk"),
         )
     else:
-        sig = srp_signatures(
-            embeddings, dim, n_bits, n_tables, seed=seed,
-            id_col=id_col, vec_col=vec_col,
-        )
+        sig = srp_signatures(embeddings, dim, n_bits, n_tables, seed=500)
         e = sig.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("v"),
             F.posexplode(
                 F.array(*[F.col(f"_b{t}") for t in range(n_tables)])
             ).alias("tbl", "blk"),
@@ -562,23 +536,21 @@ def topk_per_query(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
 ) -> DataFrame:
-    """Batch k-NN: top-k corpus neighbors for every query row, blocked —
-    join + window top-k, the shuffle-bounded shape for query *tables*."""
+    """Batch k-NN: top-k corpus neighbors for every query row, blocked
+    on `label` — join + window top-k, the shuffle-bounded shape for
+    query *tables*."""
     qd = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.col(block_col).alias("blk"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qv"),
+        norm(F.col("embedding")).alias("qn"),
+        F.col("label").alias("blk"),
     )
     cd = corpus.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-        F.col(block_col).alias("blk"),
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("cv"),
+        norm(F.col("embedding")).alias("cn"),
+        F.col("label").alias("blk"),
     )
     scored = (
         qd.join(cd, "blk")

@@ -47,15 +47,25 @@ def parse_bytes(v: str | int) -> int:
     return int(s)
 
 
-def estimated_scan_splits(df: DataFrame) -> int | None:
-    """≈ number of file-scan splits Spark will create for df's input
-    files, or None for a non-file-backed frame (in-memory/local
-    relation). Driver-side metadata only: no Spark job, no AQE stage
-    materialization, no RDD conversion."""
-    files = df.inputFiles()
-    if not files:
+def input_file_stats(df: DataFrame) -> list[tuple[str, os.stat_result | None]]:
+    """(path, stat) for each input file of df's scan(s), from ONE JVM
+    listing; stat is None where the file is not visible on the
+    driver's local filesystem (remote FS). Empty for a non-file-backed
+    frame."""
+    out = []
+    for f in df.inputFiles():
+        try:
+            st = os.stat(f.removeprefix("file:"))
+        except OSError:
+            st = None
+        out.append((f, st))
+    return out
+
+
+def _splits(spark, stats: list[tuple[str, os.stat_result | None]]) -> int | None:
+    """The FilePartition estimate over input_file_stats() rows."""
+    if not stats:
         return None
-    spark = df.sparkSession
     max_part = parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     open_cost = parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4m"))
     min_parts = int(
@@ -64,31 +74,19 @@ def estimated_scan_splits(df: DataFrame) -> int | None:
             str(spark.sparkContext.defaultParallelism),
         )
     )
-    total = 0
-    for f in files:
-        local = f.removeprefix("file:")
-        if f.startswith("file:") and os.path.exists(local):
-            total += os.path.getsize(local) + open_cost
-        else:
-            # remote FS: no driver-side stat — count each file as one
-            # full split (lower bound; at scale count >> cores anyway)
-            total += max_part
+    # remote FS: no driver-side stat — count each file as one full
+    # split (lower bound; at scale count >> cores anyway)
+    total = sum(st.st_size + open_cost if st is not None else max_part for _, st in stats)
     max_split = min(max_part, max(open_cost, total // max(min_parts, 1)))
     return max(1, math.ceil(total / max(max_split, 1)))
 
 
-def scan_input_bytes(df: DataFrame) -> int | None:
-    """Total stat'able bytes behind df's file scan(s), or None for a
-    non-file-backed frame. Driver-side metadata only."""
-    files = df.inputFiles()
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        local = f.removeprefix("file:")
-        if f.startswith("file:") and os.path.exists(local):
-            total += os.path.getsize(local)
-    return total
+def estimated_scan_splits(df: DataFrame) -> int | None:
+    """≈ number of file-scan splits Spark will create for df's input
+    files, or None for a non-file-backed frame (in-memory/local
+    relation). Driver-side metadata only: no Spark job, no AQE stage
+    materialization, no RDD conversion."""
+    return _splits(df.sparkSession, input_file_stats(df))
 
 
 def ensure_parallelism_floor(
@@ -107,11 +105,12 @@ def ensure_parallelism_floor(
     sub-min_bytes corpus finishes serially faster than its repartition
     shuffle schedules (measured r4: 1.4 s vs 2.0 s on the sf0.1
     suite), while a big-but-underfilled scan still gets spread."""
-    est = estimated_scan_splits(df)
+    stats = input_file_stats(df)
+    est = _splits(df.sparkSession, stats)
     if est is None:
         return df.repartition(target)
     if est < target:
-        if min_bytes and (scan_input_bytes(df) or 0) < min_bytes:
+        if min_bytes and sum(st.st_size for _, st in stats if st is not None) < min_bytes:
             return df
         return df.repartition(target)
     return df

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -72,6 +73,26 @@ def _sql_double(x: float) -> str:
     scientific notation ('1e-05e0' is a parse error — ADVICE r2); a
     quoted CAST accepts every repr form DuckDB-side."""
     return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _tests_module(name: str):
+    """Import a plain-Python spec module (refspec, refspec_dataprep)
+    from the checkout's tests/ dir; raises ImportError in a deployment
+    that does not ship it, which oracle_sql() turns into rows-only."""
+    tests_dir = os.path.join(_REPO_ROOT, "tests")
+    if tests_dir not in sys.path:
+        sys.path.insert(0, tests_dir)
+    return importlib.import_module(name)
+
+
+def _values_oracle(rows: list[str], select: str, alias: str) -> str:
+    """Wrap generated VALUES rows; an EMPTY replay raises so the
+    oracle_sql() wrapper degrades that key to rows-only instead of
+    emitting 'FROM (VALUES )' — a DuckDB parse error that would fail
+    the whole driver run (ADVICE r3)."""
+    if not rows:
+        raise ValueError("empty replay result — degrade to rows-only")
+    return f"{select} FROM (VALUES {','.join(rows)}) AS {alias}"
 
 
 def q(name: str, sql: str | Callable[[], str] | None = None):
@@ -717,9 +738,7 @@ def _interleaved_oracle_sql() -> str:
     same deterministic 80-doc corpus; its spans become literal rows the
     driver's DuckDB side serves. Span text is md5-hashed to keep the
     SQL compact; kind/media_ref/offset are literal."""
-    sys.path.insert(0, os.path.join(_REPO_ROOT, "tests"))
-    import refspec
-
+    refspec = _tests_module("refspec")
     docs, media = _fixture_corpus_80()
     store = {m["media_ref"]: m for m in media}
     rows = []
@@ -729,11 +748,11 @@ def _interleaved_oracle_sql() -> str:
             mref = "NULL" if s["media_ref"] is None else f"'{s['media_ref']}'"
             h = hashlib.md5((s["text"] or "").encode()).hexdigest()
             rows.append(f"('{out['doc_id']}',{s['offset']},'{s['kind']}',{mref},'{h}')")
-    return (
+    return _values_oracle(
+        rows,
         'SELECT doc_id, CAST("offset" AS BIGINT) AS "offset", kind, '
-        "CAST(media_ref AS VARCHAR) AS media_ref, text_md5 "
-        f"FROM (VALUES {','.join(rows)}) "
-        'AS t(doc_id, "offset", kind, media_ref, text_md5)'
+        "CAST(media_ref AS VARCHAR) AS media_ref, text_md5",
+        't(doc_id, "offset", kind, media_ref, text_md5)',
     )
 
 
@@ -777,13 +796,14 @@ def _media_features_oracle_sql() -> str:
             f"{m['n_pages']},{len(m['bitmap'])},{_sql_double((pages > 0).mean())},"
             f"{_sql_double(pages.mean())},{int((pages[0] > 0).any(axis=1).sum())})"
         )
-    return (
+    return _values_oracle(
+        rows,
         "SELECT media_ref, media_kind, CAST(width AS BIGINT) AS width, "
         "CAST(height AS BIGINT) AS height, CAST(n_pages AS BIGINT) AS n_pages, "
         "CAST(n_bytes AS BIGINT) AS n_bytes, ink_ratio, mean_intensity, "
-        "CAST(nonblank_rows AS BIGINT) AS nonblank_rows "
-        f"FROM (VALUES {','.join(rows)}) AS t(media_ref, media_kind, width, "
-        "height, n_pages, n_bytes, ink_ratio, mean_intensity, nonblank_rows)"
+        "CAST(nonblank_rows AS BIGINT) AS nonblank_rows",
+        "t(media_ref, media_kind, width, "
+        "height, n_pages, n_bytes, ink_ratio, mean_intensity, nonblank_rows)",
     )
 
 
@@ -832,7 +852,10 @@ def q_pipeline_lineage(spark, sf):
     its lineage TOTALS — which must equal the corpus spec exactly
     (every doc in exactly one partition, every span counted once).
     Each call runs in a fresh work dir, so the totals always come from
-    this code's runner, never from lineage an earlier build left."""
+    this code's runner, never from lineage an earlier build left. The
+    1-row totals are collected before the dir is removed and come back
+    as a pyarrow-backed local relation (no Python task)."""
+    import shutil
     import tempfile
 
     from ocr_tool_spark import fixtures
@@ -841,19 +864,24 @@ def q_pipeline_lineage(spark, sf):
 
     docs, media = fixtures.gen_corpus(24, seed=3)
     work = tempfile.mkdtemp(prefix="ocr_q_lineage_")
-    runner = PipelineRunner(spark, work, n_partitions=4, batch_partitions=2)
-    runner.run(docs_df(spark, docs), media_df(spark, media), run_id="demo")
-    return (
-        runner.lineage.read(spark)
-        .filter(F.col("run_id") == "demo")
-        .groupBy("run_id")
-        .agg(
-            F.sum("docs").alias("docs"),
-            F.sum("spans").alias("spans"),
-            F.sum("text_spans").alias("text_spans"),
-            F.sum("media_spans").alias("media_spans"),
+    try:
+        runner = PipelineRunner(spark, work, n_partitions=4, batch_partitions=2)
+        runner.run(docs_df(spark, docs), media_df(spark, media), run_id="demo")
+        totals = (
+            runner.lineage.read(spark)
+            .filter(F.col("run_id") == "demo")
+            .groupBy("run_id")
+            .agg(
+                F.sum("docs").alias("docs"),
+                F.sum("spans").alias("spans"),
+                F.sum("text_spans").alias("text_spans"),
+                F.sum("media_spans").alias("media_spans"),
+            )
+            .toArrow()
         )
-    )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return spark.createDataFrame(totals)
 
 
 # --------------------------------------- TPC-H-style analytic headliners
@@ -1093,26 +1121,21 @@ def _dataprep_replay_docs(sf_dir: str):
     return docs
 
 
-def _values_oracle(rows: list[str], select: str, alias: str) -> str:
-    """Wrap generated VALUES rows; an EMPTY replay raises so the
-    oracle_sql() wrapper degrades that key to rows-only instead of
-    emitting 'FROM (VALUES )' — a DuckDB parse error that would fail
-    the whole driver run (ADVICE r3)."""
-    if not rows:
-        raise ValueError("empty replay result — degrade to rows-only")
-    return f"{select} FROM (VALUES {','.join(rows)}) AS {alias}"
+def _replayed(build: Callable[[str], str]) -> Callable[[], str]:
+    """The zero-argument oracle `q(...)` registers for a replayed
+    builder: `build(_replay_sf_dir())`, cached per sf dir."""
+    cached = functools.lru_cache(maxsize=2)(build)
+    return lambda: cached(_replay_sf_dir())
 
 
-def _refspec_dataprep():
-    sys.path.insert(0, os.path.join(_REPO_ROOT, "tests"))
-    import refspec_dataprep
-
-    return refspec_dataprep
-
-
-@functools.lru_cache(maxsize=2)
 def _minhash_oracle_sql_for(sf_dir: str) -> str:
-    spec = _refspec_dataprep()
+    """Generated VALUES oracle for K2: the full MinHash+LSH pipeline
+    (polynomial-hash signatures, banded buckets, star-pairing,
+    hash-set-Jaccard verify) replayed by the plain-Python executable
+    spec (tests/refspec_dataprep.py, per-doc loops, python ints) over
+    the same planted corpus (_replay_sf_dir). Bit-equality asserted in
+    tests/test_refspec_dataprep.py."""
+    spec = _tests_module("refspec_dataprep")
     rows = [
         f"({a},{b},{_sql_double(j)})"
         for a, b, j in spec.minhash_pairs(_dataprep_replay_docs(sf_dir), threshold=0.6)
@@ -1124,17 +1147,7 @@ def _minhash_oracle_sql_for(sf_dir: str) -> str:
     )
 
 
-def _minhash_oracle_sql() -> str:
-    """Generated VALUES oracle for K2: the full MinHash+LSH pipeline
-    (polynomial-hash signatures, banded buckets, star-pairing,
-    hash-set-Jaccard verify) replayed by the plain-Python executable
-    spec (tests/refspec_dataprep.py, per-doc loops, python ints) over
-    the same planted corpus (_replay_sf_dir). Bit-equality asserted in
-    tests/test_refspec_dataprep.py."""
-    return _minhash_oracle_sql_for(_replay_sf_dir())
-
-
-@q("q_dedup_minhash", _minhash_oracle_sql)
+@q("q_dedup_minhash", _replayed(_minhash_oracle_sql_for))
 def q_dedup_minhash(spark, sf):
     """K2 MinHash+LSH near-dup pairs (Arrow signature stage, banded
     buckets, star-pairing for oversized buckets, exact-Jaccard verify),
@@ -1145,9 +1158,12 @@ def q_dedup_minhash(spark, sf):
     return minhash_lsh_pairs(_planted_docs(spark, sf), threshold=0.6)
 
 
-@functools.lru_cache(maxsize=2)
 def _simhash_oracle_sql_for(sf_dir: str) -> str:
-    spec = _refspec_dataprep()
+    """Generated VALUES oracle for K3: Charikar simhash (per-token
+    xxhash64 bit votes — the python XXH64 is verified against the JVM
+    in tests), 16-bit chunk bucketing, hamming verify — replayed by
+    tests/refspec_dataprep.py over _replay_sf_dir()."""
+    spec = _tests_module("refspec_dataprep")
     rows = [
         f"({a},{b},{h})"
         for a, b, h in spec.simhash_pairs(_dataprep_replay_docs(sf_dir), max_hamming=3)
@@ -1160,15 +1176,7 @@ def _simhash_oracle_sql_for(sf_dir: str) -> str:
     )
 
 
-def _simhash_oracle_sql() -> str:
-    """Generated VALUES oracle for K3: Charikar simhash (per-token
-    xxhash64 bit votes — the python XXH64 is verified against the JVM
-    in tests), 16-bit chunk bucketing, hamming verify — replayed by
-    tests/refspec_dataprep.py over _replay_sf_dir()."""
-    return _simhash_oracle_sql_for(_replay_sf_dir())
-
-
-@q("q_dedup_simhash", _simhash_oracle_sql)
+@q("q_dedup_simhash", _replayed(_simhash_oracle_sql_for))
 def q_dedup_simhash(spark, sf):
     """K3 SimHash near-dup pairs (pigeonhole chunk bucketing),
     hash-checked against the refspec_dataprep replay (upgraded from
@@ -1228,11 +1236,13 @@ def q_knn_cosine(spark, sf):
     return brute_topk(load_table(spark, sf, "embeddings"), query_vec_id=0, k=10)
 
 
-@functools.lru_cache(maxsize=2)
 def _knn_lsh_oracle_sql_for(sf_dir: str) -> str:
+    """Generated VALUES oracle for K7: deterministic SRP bucketing +
+    left-fold cosine + Spark-HALF_UP rounding replayed by
+    tests/refspec_dataprep.py over _replay_sf_dir()'s embeddings."""
     import pyarrow.parquet as pq
 
-    spec = _refspec_dataprep()
+    spec = _tests_module("refspec_dataprep")
     t = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"),
         columns=["vec_id", "embedding"],
@@ -1249,14 +1259,7 @@ def _knn_lsh_oracle_sql_for(sf_dir: str) -> str:
     )
 
 
-def _knn_lsh_oracle_sql() -> str:
-    """Generated VALUES oracle for K7: deterministic SRP bucketing +
-    left-fold cosine + Spark-HALF_UP rounding replayed by
-    tests/refspec_dataprep.py over _replay_sf_dir()'s embeddings."""
-    return _knn_lsh_oracle_sql_for(_replay_sf_dir())
-
-
-@q("q_knn_lsh", _knn_lsh_oracle_sql)
+@q("q_knn_lsh", _replayed(_knn_lsh_oracle_sql_for))
 def q_knn_lsh(spark, sf):
     """K7 SRP/LSH-bucketed approximate k-NN, hash-checked against the
     refspec_dataprep replay (upgraded from rows-only in r3); recall vs
@@ -1407,9 +1410,11 @@ def q_fingerprint(spark, sf):
 # ---------------------------------- past the 50-key driver window --------
 
 
-@functools.lru_cache(maxsize=2)
 def _components_oracle_sql_for(sf_dir: str) -> str:
-    spec = _refspec_dataprep()
+    """Generated VALUES oracle for the pairs→clusters step: union-find
+    (an INDEPENDENT algorithm) over the spec's replayed minhash pairs
+    must equal the engine's min-label-propagation components."""
+    spec = _tests_module("refspec_dataprep")
     pairs = [
         (a, b) for a, b, _ in spec.minhash_pairs(_dataprep_replay_docs(sf_dir), threshold=0.6)
     ]
@@ -1421,15 +1426,9 @@ def _components_oracle_sql_for(sf_dir: str) -> str:
     )
 
 
-def _components_oracle_sql() -> str:
-    """Generated VALUES oracle for the pairs→clusters step: union-find
-    (an INDEPENDENT algorithm) over the spec's replayed minhash pairs
-    must equal the engine's min-label-propagation components."""
-    return _components_oracle_sql_for(_replay_sf_dir())
-
-
-@q("q_dedup_components", _components_oracle_sql)  # registered PAST the
-def q_dedup_components(spark, sf):  # 50-key window; locally oracle-gated
+# registered PAST the 50-key window; locally oracle-gated
+@q("q_dedup_components", _replayed(_components_oracle_sql_for))
+def q_dedup_components(spark, sf):
     """K-family completion: connected components over the minhash
     near-dup pair graph (pairs→clusters→canonical survivor — the step
     a keep-list needs because near-dup relations aren't transitive).
@@ -1497,7 +1496,6 @@ def q_stratified_sample(spark, sf):
     return stratified_sample(
         load_table(spark, sf, "documents"),
         rates={"en": 0.5, "zh": 0.25, "de": 1.0},
-        stratum_col="lang",
         default_rate=1.0 / 16,
     )
 
@@ -1534,11 +1532,14 @@ def q_decontam(spark, sf):
     return contamination(docs, docs.filter(F.col("doc_id") % 97 == 0), n=8)
 
 
-@functools.lru_cache(maxsize=2)
 def _curate_oracle_sql_for(sf_dir: str) -> str:
-    import hashlib
-
-    spec = _refspec_dataprep()
+    """Generated VALUES oracle for K21: the full curation DAG replayed
+    by the plain-Python spec — spec.minhash_pairs + union-find for the
+    keep-list, set-algebra 8-gram decontam, hashlib-md5 bucket order +
+    a serial cumsum for packing. Three independent algorithms chained
+    on plain Python data structures vs three Spark plans chained on
+    DataFrames."""
+    spec = _tests_module("refspec_dataprep")
     docs = _dataprep_replay_docs(sf_dir)
     # stage 1: near-dup keep-list (union-find over the spec's pair set)
     pairs = [(a, b) for a, b, _ in spec.minhash_pairs(docs, threshold=0.6)]
@@ -1578,18 +1579,9 @@ def _curate_oracle_sql_for(sf_dir: str) -> str:
     )
 
 
-def _curate_oracle_sql() -> str:
-    """Generated VALUES oracle for K21: the full curation DAG replayed
-    by the plain-Python spec — spec.minhash_pairs + union-find for the
-    keep-list, set-algebra 8-gram decontam, hashlib-md5 bucket order +
-    a serial cumsum for packing. Three independent algorithms chained
-    on plain Python data structures vs three Spark plans chained on
-    DataFrames."""
-    return _curate_oracle_sql_for(_replay_sf_dir())
-
-
-@q("q_curate", _curate_oracle_sql)  # registered PAST the 50-key
-def q_curate(spark, sf):  # window; locally oracle-gated
+# registered PAST the 50-key window; locally oracle-gated
+@q("q_curate", _replayed(_curate_oracle_sql_for))
+def q_curate(spark, sf):
     """K21 end-to-end curation: near-dup dedup keep-list → benchmark
     decontamination → token-budget shard packing as ONE composed Spark
     plan (dataprep/curate.py). Corpus: the planted documents table

@@ -52,6 +52,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ocr_tool_spark.constants import KIND_MEDIA, KIND_TEXT
+from ocr_tool_spark.operators.parallelism import input_file_stats
 from ocr_tool_spark.plans.pipeline import extract_spans, referenced_media
 from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
 from ocr_tool_spark.storage.adapter import SnapshotTable
@@ -90,11 +91,9 @@ def input_fingerprint(docs: DataFrame) -> str:
     first 64 rows collide — file-backed inputs (the production path)
     are fully distinguished by the file list + stat identity."""
     basis = [docs.schema.simpleString()]
-    for f in sorted(docs.inputFiles()):
+    for f, st in sorted(input_file_stats(docs), key=lambda fs: fs[0]):
         basis.append(f)
-        local = f.removeprefix("file:")
-        if os.path.exists(local):
-            st = os.stat(local)
+        if st is not None:
             basis.append(f"{st.st_size}:{st.st_mtime_ns}")
     head = repr(docs.limit(64).collect())
     basis.append(hashlib.sha256(head.encode()).hexdigest())

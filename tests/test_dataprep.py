@@ -192,13 +192,13 @@ def test_ivf_index_dir_is_keyed_by_input_params_and_code(spark, monkeypatch):
 
     e = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])],
                               "vec_id long, embedding array<float>")
-    key = similarity.ivf_index_dir(e, "embedding", 8, 42)
-    assert similarity.ivf_index_dir(e, "embedding", 8, 42) == key
-    assert similarity.ivf_index_dir(e, "embedding", 8, 43) != key
+    key = similarity.ivf_index_dir(e, 8)
+    assert similarity.ivf_index_dir(e, 8) == key
+    assert similarity.ivf_index_dir(e, 16) != key
     with open(similarity.__file__, "rb") as f:
         assert similarity._index_code() == hashlib.sha256(f.read()).hexdigest()[:16]
     monkeypatch.setattr(similarity, "_index_code", lambda: "changed-ivf-build")
-    assert similarity.ivf_index_dir(e, "embedding", 8, 42) != key
+    assert similarity.ivf_index_dir(e, 8) != key
 
 
 def test_minhash_oversized_bucket_star_pairs(spark):
@@ -215,16 +215,6 @@ def test_minhash_oversized_bucket_star_pairs(spark):
     # star topology: every dup copy pairs with representative doc 0
     for i in range(1, 80):
         assert (0, i) in pairs, f"copy {i} not linked to keeper"
-
-
-def test_minhash_bucket_stats_surface_oversize(spark):
-    text = " ".join(VOCAB[:20])
-    d = spark.createDataFrame(
-        [(i, text) for i in range(40)], "doc_id long, text string"
-    )
-    stats = dedup.minhash_bucket_stats(d, max_bucket=16).collect()
-    assert all(r.n_oversized >= 1 for r in stats)  # the 40-dup bucket
-    assert all(r.max_size == 40 for r in stats)
 
 
 def test_ocr_glyph_cache_handles_unknown_crops(spark):
@@ -677,7 +667,7 @@ def test_shingle_hash_sets_vectorized_distinct_matches_spec(spark):
         (4, "solo"),
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d, k=3).collect()}
+    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d).collect()}
     for i, t in rows:
         # exact ORDER equality: ascending as uint64 (the kernel's sort
         # key), expressed through the int64 storage view
@@ -813,7 +803,7 @@ def test_shingle_hash_sets_randomized_differential(spark):
                 (i, " ".join(vocab[j] for j in rng.integers(0, len(vocab), n)))
             )
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d, k=3).collect()}
+    got = {r.doc_id: r._sh for r in dedup.shingle_hash_sets(d).collect()}
     for i, t in rows:
         exp = (
             np.array(sorted(spec.shingle_hash_set(t, 3)), dtype=np.uint64)

@@ -90,3 +90,28 @@ def test_registration_order_pins_the_driver_window():
         "q_dedup_components", "q_pack_shards", "q_stratified_sample",
         "q_decontam", "q_curate",
     ]
+
+
+def test_only_q_knn_ivf_is_rows_only():
+    """oracle_sql() turns a failing generated oracle into a warning and
+    drops the key, which silently moves it from the oracle test to the
+    rows-only test. Pin the one key that is rows-only by design."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        oracles = driver_queries.oracle_sql()
+    assert [str(w.message) for w in caught] == []
+    assert set(driver_queries.queries()) - set(oracles) == {"q_knn_ivf"}
+
+
+def test_pipeline_lineage_leaves_no_work_dir(spark, sf_dir_mid):
+    import glob
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "ocr_q_lineage_*")
+    before = set(glob.glob(pattern))
+    rows = QUERIES["q_pipeline_lineage"](spark, sf_dir_mid).collect()
+    assert len(rows) == 1 and rows[0]["run_id"] == "demo"
+    assert set(glob.glob(pattern)) - before == set()

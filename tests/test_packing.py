@@ -129,7 +129,6 @@ def test_stratified_sample_matches_hash_replay(spark, sf_dir_mid):
         stratified_sample(
             spark.read.parquet(os.path.join(sf_dir_mid, "documents.parquet")),
             rates=rates,
-            stratum_col="lang",
             default_rate=1.0 / 16,
         )
         .toPandas()
@@ -161,7 +160,7 @@ def test_stratified_sample_matches_hash_replay(spark, sf_dir_mid):
 def test_stratified_sample_default_rate_zero(spark, sf_dir_mid):
     docs = spark.read.parquet(os.path.join(sf_dir_mid, "documents.parquet"))
     got = stratified_sample(
-        docs, rates={"en": 1.0}, stratum_col="lang", default_rate=0.0
+        docs, rates={"en": 1.0}, default_rate=0.0
     ).toPandas()
     assert set(got["lang"]) == {"en"}
     n_en = docs.filter(F.col("lang") == "en").count()
