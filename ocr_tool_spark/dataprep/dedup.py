@@ -46,9 +46,6 @@ _P = (1 << 31) - 1
 NUM_HASHES = 32
 BANDS = 8
 SHINGLE_K = 3
-# min-label propagation rounds before pair_components gives up on a
-# fixpoint (star-capped buckets keep diameters ~2)
-_MAX_ROUNDS = 25
 
 
 def normalize_text(c: Column) -> Column:
@@ -464,7 +461,9 @@ def pair_components(pairs: DataFrame) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     handles = [edges, labels]
-    for _ in range(_MAX_ROUNDS):
+    # labels only decrease, so the loop reaches its fixpoint within
+    # diameter + 1 rounds; a round cap would leave long chains split
+    while True:
         prop = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")

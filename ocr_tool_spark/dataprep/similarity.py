@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ocr_tool_spark.dataprep import keep_intermediates
 from ocr_tool_spark.dataprep.dedup import bucket_pairs
+from ocr_tool_spark.sources.tables import local_frame
 
 
 def _f8(c: Column) -> Column:
@@ -274,10 +275,11 @@ def ivf_build(
         cent_rows = [
             (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
         ]
-        spark.createDataFrame(
-            cent_rows, "cell int, centroid array<double>"
+        local_frame(
+            spark, cent_rows, "cell int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(f"{base}/centroids")
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(n_centroids), _IVF_SEED, token, _time.time_ns())],
             "n_centroids int, seed int, build string, build_ts long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params/{token}")

@@ -1,11 +1,13 @@
-"""Batched media extraction: raster decode -> XY-cut -> reading order ->
-template OCR, fused into ONE Arrow-vectorized iterator pandas UDF
-(SURVEY.md I4-I8, H2/H3).
+"""Page OCR: raster decode -> XY-cut -> reading order -> template OCR,
+fused into ONE Arrow-vectorized iterator pandas UDF (SURVEY.md I4-I8,
+H2/H3).
 
 Design notes (scale):
-- One fused Python stage per media span = one executor<->Python-worker
-  Arrow crossing; bitmap binary never round-trips twice (SURVEY.md §3.1
-  boundary rule).
+- The page is the only OCR unit: the pipeline slices payloads into
+  pages on the JVM side and joins page texts in SQL
+  (pipeline.ocr_referenced_media). Each page crosses the
+  executor<->Python-worker Arrow boundary once; bitmap binary never
+  round-trips twice (SURVEY.md §3.1 boundary rule).
 - SCALAR_ITER so the glyph template dictionary is materialized once per
   Python worker, not once per batch.
 - All pixel work is numpy (run detection via diff/flatnonzero, iterative
@@ -14,8 +16,8 @@ Design notes (scale):
   the differential tests assert it equals exactly.
 - Integer-only matching (tight-bbox pattern lookup) keeps OCR float-free
   (SURVEY.md §7 hard-part #4).
-- Per-span wall latency is returned alongside the text so lineage
-  percentile metrics (ocr_ms_p50/p95) come for free (FIXTURES.md §1.4).
+- Per-page wall latency comes back with the text; summed per span, it
+  feeds the lineage percentiles ocr_ms_p50/p95 (FIXTURES.md §1.4).
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ from ocr_tool_spark.constants import (
     MIN_GAP_X,
     MIN_GAP_Y,
     OCR_LINE_JOIN,
-    OCR_PAGE_JOIN,
     SPACE_GAP,
 )
 from ocr_tool_spark.functions.glyphs import TEMPLATES, trimmed_pattern
@@ -175,35 +176,29 @@ def read_block(page: np.ndarray, bbox: tuple[int, int, int, int]) -> str:
     return OCR_LINE_JOIN.join(lines)
 
 
-def read_media(bitmap: bytes, width: int, height: int, n_pages: int) -> str:
-    pages = np.frombuffer(bitmap, dtype=np.uint8).reshape(n_pages, height, width)
-    page_texts = []
-    for p in range(n_pages):
-        page = pages[p]
-        texts = [
-            t
-            for t in (read_block(page, b) for b in order_blocks(segment_page(page)))
-            if t
-        ]
-        if texts:
-            page_texts.append(OCR_LINE_JOIN.join(texts))
-    return OCR_PAGE_JOIN.join(page_texts)
+def read_page(page: np.ndarray) -> str:
+    """Text of one page: XY-cut leaves in reading order, each read by
+    read_block, the non-empty block texts joined by OCR_LINE_JOIN."""
+    texts = (read_block(page, b) for b in order_blocks(segment_page(page)))
+    return OCR_LINE_JOIN.join(t for t in texts if t)
 
 
 @F.pandas_udf(OCR_RESULT)
 def ocr_media_udf(
-    batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
+    batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
 ) -> Iterator[pd.DataFrame]:
-    """(bitmap, width, height, n_pages) -> struct(text, ocr_ms).
+    """(page, width, height) -> struct(text, ocr_ms): one page bitmap
+    (height*width bytes) per row.
 
     Iterator form: worker-lifetime init happens once (TEMPLATES is
     module-level, imported on worker start), batches stream through.
     """
-    for bitmap, width, height, n_pages in batches:
+    for page, width, height in batches:
         texts = []
         lat = []
-        for b, w, h, p in zip(bitmap, width, height, n_pages):
+        for b, w, h in zip(page, width, height):
             t0 = time.perf_counter()
-            texts.append(read_media(b, int(w), int(h), int(p)))
+            px = np.frombuffer(b, dtype=np.uint8).reshape(int(h), int(w))
+            texts.append(read_page(px))
             lat.append((time.perf_counter() - t0) * 1000.0)
         yield pd.DataFrame({"text": texts, "ocr_ms": lat})

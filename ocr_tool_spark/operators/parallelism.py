@@ -96,7 +96,7 @@ def ensure_parallelism_floor(
     fewer splits — the parallelism floor before an expensive Python
     stage. In-memory frames (None estimate) are repartitioned
     unconditionally: they are driver-sized by construction, so the
-    shuffle is trivial, and small createDataFrame inputs are exactly
+    shuffle is trivial, and small driver-built inputs are exactly
     the underfilled case the floor exists for. At 100 TB the estimate
     is always >> target and this is a no-op — no shuffle added.
 

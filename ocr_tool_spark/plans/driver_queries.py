@@ -59,7 +59,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ocr_tool_spark.sources.tables import load_table
+from ocr_tool_spark.sources.tables import load_table, local_frame
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLE: dict[str, str | Callable[[], str]] = {}
@@ -853,8 +853,7 @@ def q_pipeline_lineage(spark, sf):
     (every doc in exactly one partition, every span counted once).
     Each call runs in a fresh work dir, so the totals always come from
     this code's runner, never from lineage an earlier build left. The
-    1-row totals are collected before the dir is removed and come back
-    as a pyarrow-backed local relation (no Python task)."""
+    1-row totals are collected before the dir is removed."""
     import shutil
     import tempfile
 
@@ -877,11 +876,11 @@ def q_pipeline_lineage(spark, sf):
                 F.sum("text_spans").alias("text_spans"),
                 F.sum("media_spans").alias("media_spans"),
             )
-            .toArrow()
         )
+        schema, rows = totals.schema, totals.toArrow().to_pylist()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(totals)
+    return local_frame(spark, rows, schema)
 
 
 # --------------------------------------- TPC-H-style analytic headliners
@@ -1306,10 +1305,8 @@ def q_knn_ivf_recall(spark, sf):
         for r in ivf_topk(e, query_vec_id=0, k=10, nprobe=16).collect()
     ]
     recall_ok = len(approx & {v for v, _ in brute}) >= 7
-    return spark.createDataFrame(
-        [(10, int(recall_ok), int(exhaustive == brute))],
-        "k long, recall_ok long, exhaustive_exact long",
-    )
+    row = (10, int(recall_ok), int(exhaustive == brute))
+    return local_frame(spark, [row], "k long, recall_ok long, exhaustive_exact long")
 
 
 @q(

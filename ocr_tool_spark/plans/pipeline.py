@@ -48,9 +48,9 @@ def referenced_media(refs: DataFrame, media_store: DataFrame) -> DataFrame:
     """-> the media_store rows the OCR stage sees, one per distinct row
     of ``refs`` (media_ref plus any key the caller keeps, such as the
     runner's partition_id) whose media holds at least one page.
-    n_pages <= 0 (empty/malformed media) must degrade to "" like the
-    single-call read_media path — without the filter, sequence(0, -1)
-    yields a descending [0,-1] and the UDF reshape crashes the job."""
+    n_pages <= 0 (empty/malformed media) must degrade to "" via the
+    results' left join — without the filter, sequence(0, -1) yields a
+    descending [0,-1] and the UDF reshape crashes the job."""
     return media_store.join(refs.distinct(), "media_ref").filter(F.col("n_pages") > 0)
 
 
@@ -111,15 +111,15 @@ def ocr_referenced_media(
     par = live.sparkSession.sparkContext.defaultParallelism
     pages = pages.repartition(ocr_fan_out(par, ocr_pages))
     per = pages.withColumn(
-        "_ocr", ocr_media_udf("page", "width", "height", F.lit(1))
+        "_ocr", ocr_media_udf("page", "width", "height")
     ).select(
         "media_ref",
         "page_idx",
         res["text"].alias("_pt"),
         res["ocr_ms"].alias("_pms"),
     )
-    # reassemble pages in order; empty pages are skipped, matching the
-    # single-call read_media semantics exactly
+    # reassemble pages in order, skipping empty pages: the one place
+    # page texts are joined (OCR_PAGE_JOIN)
     return (
         per.groupBy("media_ref")
         .agg(

@@ -23,8 +23,8 @@ Execution model, designed for the 10^12-doc table:
    1-batch run() calls, so a small batch costs seconds of fixed
    overhead. Each Python-worker task costs ~0.1-0.3 s on a 4-vCPU host
    even when its partition is empty, so the OCR fan-out is the batch's
-   summed page count (pipeline.ocr_fan_out) and the lineage rows go
-   through a pyarrow Table (no Python task).
+   summed page count (pipeline.ocr_fan_out) and the lineage rows enter
+   Spark through ``sources.tables.local_frame`` (no Python task).
 3. **Crash anywhere**: output appends are idempotent by batch_id
    (SnapshotTable contract), lineage is written after output, so on
    resume a half-committed batch is either skipped (lineage present) or
@@ -43,18 +43,16 @@ import os
 import time
 from datetime import datetime, timezone
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from ocr_tool_spark.constants import KIND_MEDIA, KIND_TEXT
 from ocr_tool_spark.operators.parallelism import input_file_stats
 from ocr_tool_spark.plans.pipeline import extract_spans, referenced_media
 from ocr_tool_spark.operators.spans import explode_spans, reassemble, route
+from ocr_tool_spark.sources.tables import local_frame
 from ocr_tool_spark.storage.adapter import SnapshotTable
 
 LINEAGE_SCHEMA = (
@@ -62,17 +60,6 @@ LINEAGE_SCHEMA = (
     "text_spans long, media_spans long, ocr_ms_p50 double, ocr_ms_p95 double, "
     "docs_per_sec double, snapshot_id long, committed_at timestamp"
 )
-
-
-def lineage_table(rows: list[tuple]) -> pa.Table:
-    """Lineage rows (tuples in ``LINEAGE_SCHEMA`` order) as a pyarrow
-    Table. ``createDataFrame`` turns a Table into a JVM-side local
-    relation; a Python list would go through ``sc.parallelize`` and
-    start ``defaultParallelism`` Python-worker tasks (~0.5 s a batch)."""
-    schema = StructType.fromDDL(LINEAGE_SCHEMA)
-    return pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
 
 
 def deterministic_run_id(*parts: str) -> str:
@@ -278,8 +265,9 @@ class PipelineRunner:
                 )
                 for p in batch
             ]
-            ldf = self.spark.createDataFrame(lineage_table(lineage_rows))
-            self.lineage.append(ldf, batch_id=batch_id)
+            self.lineage.append(
+                local_frame(self.spark, lineage_rows, LINEAGE_SCHEMA), batch_id=batch_id
+            )
         return run_id
 
     def read_output(self) -> DataFrame | None:

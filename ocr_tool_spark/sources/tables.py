@@ -1,10 +1,13 @@
-"""DataFrame constructors: driver testdata parquet + fixture corpora."""
+"""DataFrame constructors: driver testdata parquet and driver-built rows."""
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ocr_tool_spark.sources.schemas import DOC, MEDIA_STORE
 
@@ -67,9 +70,23 @@ def interleaved_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Driver-built rows (dicts, or tuples in ``schema`` field order) as
+    a DataFrame with exactly ``schema``, via a pyarrow Table: a JVM-side
+    local relation, where a Python list would start ``defaultParallelism``
+    Python-worker tasks. The package's one ``createDataFrame`` call."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def docs_df(spark: SparkSession, docs: list[dict]) -> DataFrame:
-    return spark.createDataFrame(docs, schema=DOC)
+    return local_frame(spark, docs, DOC)
 
 
 def media_df(spark: SparkSession, media: list[dict]) -> DataFrame:
-    return spark.createDataFrame(media, schema=MEDIA_STORE)
+    return local_frame(spark, media, MEDIA_STORE)

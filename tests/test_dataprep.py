@@ -229,13 +229,13 @@ def test_ocr_glyph_cache_handles_unknown_crops(spark):
 
     rng = np.random.default_rng(5)
     noise = (rng.random((40, 60)) < 0.35).astype(np.uint8) * 255
-    out_noise = ocr.read_media(noise.tobytes(), 60, 40, 1)
+    out_noise = ocr.read_page(noise)
     assert isinstance(out_noise, str)  # unknown runs skipped, no crash
     assert len(ocr._CODE_CACHE) <= ocr._CODE_CACHE_MAX
     line = render_line("HELLO 42")
     page = np.zeros((line.shape[0] + 4, line.shape[1] + 4), dtype=np.uint8)
     page[2 : 2 + line.shape[0], 2 : 2 + line.shape[1]] = line
-    assert ocr.read_media(page.tobytes(), page.shape[1], page.shape[0], 1) == "HELLO 42"
+    assert ocr.read_page(page) == "HELLO 42"
 
 
 def test_minhash_arrow_signatures_partitioning_invariant(spark, tmp_path):
@@ -402,6 +402,19 @@ def test_pair_components_transitive_closure(spark):
     p = spark.createDataFrame(pairs, "id_a long, id_b long")
     got = {r.doc_id: r.component for r in dedup.pair_components(p).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+def test_pair_components_long_chain_matches_union_find_spec(spark):
+    """Min-label propagation needs about diameter rounds: on the
+    41-node path 0-1-...-40 every node must reach component 0, as the
+    spec's union-find gives, not stop after a fixed round count."""
+    import refspec_dataprep as spec
+
+    pairs = [(i, i + 1) for i in range(40)]
+    p = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = sorted((r.doc_id, r.component) for r in dedup.pair_components(p).collect())
+    assert got == spec.pair_components(pairs)
+    assert {c for _, c in got} == {0}
 
 
 def test_pair_components_empty_pairs(spark):

@@ -52,11 +52,16 @@ def test_tokenizer_agrees_on_adversarial_cases():
 
 
 def test_ocr_engine_agrees_on_media_store():
+    """Every page of every payload: the page is the engine's OCR unit
+    (multi-page assembly is the pipeline's SQL, checked end to end by
+    test_full_corpus_span_equality)."""
     media = fixtures.gen_media_store(60, seed=42)
     for m in media:
-        ours = eocr.read_media(m["bitmap"], m["width"], m["height"], m["n_pages"])
-        ref = refspec.ocr_media(m["bitmap"], m["width"], m["height"], m["n_pages"])
-        assert ours == ref, m["media_ref"]
+        pages = np.frombuffer(m["bitmap"], dtype=np.uint8).reshape(
+            m["n_pages"], m["height"], m["width"]
+        )
+        for p, page in enumerate(pages):
+            assert eocr.read_page(page) == refspec.ocr_page(page), (m["media_ref"], p)
 
 
 def test_ocr_engine_agrees_on_constructed_pages():
@@ -74,10 +79,7 @@ def test_ocr_engine_agrees_on_constructed_pages():
         render_page([[render_figure(20, 40)]]),
     ]
     for page in pages:
-        stack = page[None, :, :]
-        ours = eocr.read_media(stack.tobytes(), page.shape[1], page.shape[0], 1)
-        ref = refspec.ocr_media(stack.tobytes(), page.shape[1], page.shape[0], 1)
-        assert ours == ref
+        assert eocr.read_page(page) == refspec.ocr_page(page)
 
 
 def test_segmentation_primitives_agree():

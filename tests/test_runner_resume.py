@@ -208,29 +208,70 @@ def test_default_run_id_differs_per_input(spark, tmp_path):
     assert rid_a != rid_b
 
 
-def test_lineage_frame_schema_and_plan(spark, tmp_path):
-    """The runner's per-batch lineage frame has exactly LINEAGE_SCHEMA,
-    field by field, and is a JVM-side local relation: a Python list
-    would go through sc.parallelize and start Python-worker tasks."""
+def test_lineage_frame_schema_and_plan(spark, sf_dir_mid, tmp_path):
+    """Every driver-built frame (docs_df, media_df, the runner's
+    per-batch lineage rows, the q_knn_ivf_recall row) has exactly its
+    declared schema, field by field, and is a JVM-side local relation:
+    a Python list would go through sc.parallelize and start
+    Python-worker tasks."""
     from pyspark.sql.types import StructType
 
+    from ocr_tool_spark.plans.driver_queries import queries
     from ocr_tool_spark.plans.runner import LINEAGE_SCHEMA
+    from ocr_tool_spark.sources.schemas import DOC, MEDIA_STORE
 
     docs, media = fixtures.gen_corpus(8, seed=1)
     runner = PipelineRunner(spark, str(tmp_path / "w"), n_partitions=2,
                             batch_partitions=1)
     frames, append = [], runner.lineage.append
     runner.lineage.append = lambda df, batch_id: frames.append(df) or append(df, batch_id)
-    runner.run(docs_df(spark, docs), media_df(spark, media), run_id="r")
+    d, m = docs_df(spark, docs), media_df(spark, media)
+    runner.run(d, m, run_id="r")
     assert len(frames) == 2
-    expected = StructType.fromDDL(LINEAGE_SCHEMA)
-    for df in frames:
-        assert list(df.schema.fields) == list(expected.fields)
+    lineage = StructType.fromDDL(LINEAGE_SCHEMA)
+    recall = StructType.fromDDL("k long, recall_ok long, exhaustive_exact long")
+    declared = [
+        (d, DOC),
+        (m, MEDIA_STORE),
+        *((f, lineage) for f in frames),
+        (queries()["q_knn_ivf_recall"](spark, sf_dir_mid), recall),
+    ]
+    for df, schema in declared:
+        assert list(df.schema.fields) == list(schema.fields)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan
     rows = runner.lineage.read(spark).collect()
     assert sorted(r.partition_id for r in rows) == [0, 1]
     assert all(r.committed_at is not None for r in rows)
+
+
+def test_local_frame_is_the_only_create_dataframe_call():
+    """Driver-built rows enter Spark one way: the package calls
+    createDataFrame exactly once, inside sources.tables.local_frame."""
+    import ast
+    import pathlib
+
+    import ocr_tool_spark
+
+    def calls(node):
+        return sum(
+            isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "createDataFrame"
+            for c in ast.walk(node)
+        )
+
+    root = pathlib.Path(ocr_tool_spark.__file__).parent
+    per_file = {
+        p.relative_to(root).as_posix(): calls(ast.parse(p.read_text()))
+        for p in root.rglob("*.py")
+    }
+    assert {f: n for f, n in per_file.items() if n} == {"sources/tables.py": 1}
+    tables = ast.parse((root / "sources" / "tables.py").read_text())
+    helper = next(
+        f for f in tables.body if isinstance(f, ast.FunctionDef) and f.name == "local_frame"
+    )
+    assert calls(helper) == 1
 
 
 def test_lineage_written_before_arrow_rows_stays_readable(spark, tmp_path):
